@@ -1,4 +1,5 @@
 package graft
+import graft.queries.Layouts
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -69,91 +70,43 @@ object Bench {
     val benchEpoch = System.nanoTime()
     val starts = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val persisted = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    // shared ingest-time layouts get their own timed entry — charged to
-    // neither the first dedup query (arbitrary) nor hidden in warmup
-    // (flattering): total stays honest, per-query times stay comparable.
-    // Skipped when a filter selects no dedup queries (nothing would read it).
-    val dedupSelected = selected.exists(_._1.startsWith("dedup"))
-    val selNames = selected.map(_._1).toSet
-    // r22: shared retrieval layouts (BM25 ranking / impact index /
-    // hybrid fusion — see RetrievalLayouts) get the same treatment as
-    // the dedup layout stages: warmed only when a consumer is selected,
-    // timed as their own named entries, included in `total`.
-    val bm25ScoreConsumers = Set("text_probe_bm25", "text_mmr_diversify",
-      "eval_ndcg", "eval_mrr", "stream_probe_bm25")
-    val hybridConsumers = Set("text_hybrid_rrf", "stream_hybrid_rrf")
-    // order matters: the ranked scores derive from the impact index, so
-    // the index warms first (and is needed whenever scores are)
-    val retrievalStages = Seq[(String, () => Long)](
-      "layout_bm25_index" ->
-        (() => graft.queries.RetrievalLayouts.warmBm25Index(spark, sfDir)),
-      "layout_bm25_scores" ->
-        (() => graft.queries.RetrievalLayouts.warmBm25Scores(spark, sfDir)),
-      "layout_probe_rels" ->
-        (() => graft.queries.RetrievalLayouts.warmProbeRels(spark, sfDir)),
-      "layout_hybrid_fused" ->
-        (() => graft.queries.RetrievalLayouts.warmHybridFused(spark, sfDir)))
-      .filter {
-        case ("layout_bm25_index", _) => // scores/rels/terms derive from it
-          selNames.exists(bm25ScoreConsumers) ||
-            selNames.contains("stream_hybrid_rrf")
-        case ("layout_bm25_scores", _) => selNames.exists(bm25ScoreConsumers)
-        case ("layout_probe_rels", _) =>
-          selNames.contains("eval_ndcg") || selNames.contains("eval_mrr")
-        case _ => selNames.exists(hybridConsumers)
-      }
-    val layoutEntries =
-      if (!dedupSelected && retrievalStages.isEmpty) Seq.empty
-      else {
-        // r21 (r20 verdict task 4): the combined entry moved +46% when
-        // the edge layout replaced the pair build and nothing localized
-        // WHICH stage moved — time each stage as its own named entry
-        // (shingle explode+distinct, bounded-edge build, window
-        // explode+distinct) and keep layout_shared_shingles as their
-        // SUM, so the series stays comparable while regressions
-        // attribute to a stage. Stage order mirrors warmSharedLayouts
-        // (edges consume the shingle cache).
-        val dedupStages =
-          if (!dedupSelected) Seq.empty
-          else Seq[(String, () => Long)](
-            "layout_shingles" -> (() => graft.queries.DedupQueries.warmShingles(spark, sfDir)),
-            "layout_edges" -> (() => graft.queries.DedupQueries.warmEdges(spark, sfDir)),
-            "layout_windows" -> (() => graft.queries.DedupQueries.warmWindows(spark, sfDir)))
-        val stages = dedupStages ++ retrievalStages
-        val dedupNames = dedupStages.map(_._1).toSet
-        val t0all = System.nanoTime()
-        if (dedupSelected)
-          starts("layout_shared_shingles") = (t0all - benchEpoch) / 1e9
-        // r21 ADVICE: once a stage fails, later stages of the SAME
-        // lineage would run cache-less retries and their walls are not
-        // measurements — skip dependents (dedup stages chain; the
-        // retrieval stages are independent of them and of each other)
-        var dedupDead = false
-        val timed = stages.map { case (name, warm) =>
-          val t0 = System.nanoTime()
-          starts(name) = (t0 - benchEpoch) / 1e9
-          val skip = dedupDead && dedupNames(name)
-          if (!skip) {
-            try warm()
-            catch { case e: Throwable =>
-              failed += name
-              if (dedupNames(name)) {
-                dedupDead = true
-                if (!failed.contains("layout_shared_shingles"))
-                  failed += "layout_shared_shingles"
-              }
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            }
-          } else failed += name
-          persisted(name) = spark.sparkContext.getPersistentRDDs.size
-          name -> (System.nanoTime() - t0) / 1e9
+    // Shared per-corpus layouts get their own timed entries, charged to
+    // neither the first consumer (arbitrary) nor hidden in warmup
+    // (flattering): total stays honest, per-query times comparable. The
+    // registry derives which layouts the selection reads and their
+    // dependency order; once a layout fails, its dependents are skipped
+    // and marked failed (a cache-less rebuild's wall is no measurement).
+    val layouts = Layouts.needed(selected.map(_._1))
+    val sums = Layouts.sums
+      .filter(_._2.exists(m => layouts.exists(_.name == m)))
+    val layoutEntries = {
+      val t0all = System.nanoTime()
+      sums.foreach { case (sum, _) => starts(sum) = (t0all - benchEpoch) / 1e9 }
+      val dead = scala.collection.mutable.Set.empty[String]
+      val timed = layouts.map { l =>
+        val t0 = System.nanoTime()
+        starts(l.entry) = (t0 - benchEpoch) / 1e9
+        val ok = !dead(l.name) && {
+          try { Layouts.warm(spark, sfDir, l.name); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] ${l.entry} FAILED: ${e.getMessage}")
+            false
+          }
         }
-        val dedupTimed = timed.filter(t => dedupNames(t._1))
-        if (dedupSelected) {
-          persisted("layout_shared_shingles") = spark.sparkContext.getPersistentRDDs.size
-          timed :+ ("layout_shared_shingles" -> dedupTimed.map(_._2).sum)
-        } else timed
+        if (!ok) {
+          failed += l.entry
+          dead ++= Layouts.dependents(l.name)
+          sums.foreach { case (sum, ms) =>
+            if (ms.contains(l.name) && !failed.contains(sum)) failed += sum }
+        }
+        persisted(l.entry) = spark.sparkContext.getPersistentRDDs.size
+        l -> (System.nanoTime() - t0) / 1e9
       }
+      timed.map { case (l, t) => l.entry -> t } ++ sums.map { case (sum, ms) =>
+        persisted(sum) = spark.sparkContext.getPersistentRDDs.size
+        sum -> timed.collect { case (l, t) if ms.contains(l.name) => t }.sum
+      }
+    }
     // Best-of-N (default 2): this shared VM's run-to-run noise reaches
     // 1.7× (BENCH_NOTES), so a single sample regularly reads as a
     // phantom regression. The min of two back-to-back runs is the
@@ -202,11 +155,9 @@ object Bench {
       .mkString("{", ",", "}")
     val pr = persisted.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // layout_shared_shingles is DERIVED (the sum of the three stage
-    // entries, kept for series continuity) — excluded from the total so
-    // the one-time layout cost counts exactly once, as in every prior
-    // round's total
-    val derived = Set("layout_shared_shingles")
+    // sum entries are DERIVED (kept for series continuity) — excluded
+    // from the total so the one-time layout cost counts exactly once
+    val derived = sums.map(_._1).toSet
     val total = results.collect { case (k, v) if !derived(k) => v }.sum
     val order =
       if (sys.env.get("GRAFT_BENCH_ORDER").contains("reverse")) "reverse" else "alpha"
@@ -229,8 +180,8 @@ object Bench {
       (l.take(20).map("\"" + _ + "\"") ++
         (if (l.size > 20) Seq("\"...+" + (l.size - 20) + "\"") else Nil))
         .mkString("[", ",", "]")
-    // n_queries counts every TIMED row; the shared-layout entry is not a
-    // registry query, so the registry count and the extra rows are named
+    // n_queries counts every TIMED row; the layout entries are not
+    // registry queries, so the registry count and the extra rows are named
     // explicitly — series comparisons stay exact (r17 verdict task 8:
     // BENCH_r17's 406 vs the 405-query registry was this one row).
     val extras = layoutEntries.map(_._1)

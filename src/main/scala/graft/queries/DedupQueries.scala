@@ -35,16 +35,15 @@ object DedupQueries {
       else org.apache.spark.storage.StorageLevel.DISK_ONLY
     })
 
-  /** 5-token shingle table per sfDir, persisted and shared by the exact
-    * and MinHash queries (both need it; computing it twice doubles the
-    * dominant scan+explode cost).
+  /** 5-token shingle table per sfDir, shared by the exact and MinHash
+    * queries (both need it; computing it twice doubles the dominant
+    * scan+explode cost). Owned by [[Layouts]].
     */
-  private val shingleCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.DataFrame]
-  private def sharedShingles(spark: org.apache.spark.sql.SparkSession, sf: String) =
-    shingleCache.getOrElseUpdate(sf,
+  private[queries] def sharedShingles(spark: org.apache.spark.sql.SparkSession, sf: String) =
+    Layouts.memo(spark, sf, "shingles") {
       graft.ops.Dedup.shingleTable(load(spark, sf, "documents"), "text", "doc_id", 5)
-        .persist(stagingLevel(spark, sf)))
+        .persist(stagingLevel(spark, sf))
+    }
 
   /** BOUNDED near-dup edge layout (exact n-gram Jaccard ≥ 0.8 on
     * per-bucket neighbor-chain candidates) per sfDir, persisted and
@@ -65,50 +64,31 @@ object DedupQueries {
     * all-pairs semantics — the PAIR SET is their product; here it was
     * only scaffolding for components.
     */
-  private val edgeCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.DataFrame]
-  private def sharedClusterEdges(spark: org.apache.spark.sql.SparkSession, sf: String) =
-    edgeCache.getOrElseUpdate(sf,
+  private[queries] def sharedClusterEdges(spark: org.apache.spark.sql.SparkSession, sf: String) =
+    Layouts.memo(spark, sf, "edges") {
       Dedup.ngramJaccardEdgesBounded(
         load(spark, sf, "documents"), "text", "doc_id", k = 5, minJaccard = 0.8,
         precomputedShingles = Some(sharedShingles(spark, sf)))
-        .persist(stagingLevel(spark, sf)))
+        .persist(stagingLevel(spark, sf))
+    }
 
   /** 20-token window-hash table per sfDir, persisted and shared by the
     * substring gates (uncut + cut) — one corpus explode, not one per
     * gate per run.
     */
-  private val windowCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.DataFrame]
-  private def sharedWindows(spark: org.apache.spark.sql.SparkSession, sf: String) =
-    windowCache.getOrElseUpdate(sf,
+  private[queries] def sharedWindows(spark: org.apache.spark.sql.SparkSession, sf: String) =
+    Layouts.memo(spark, sf, "windows") {
       Dedup.windowTable(load(spark, sf, "documents"), "text", "doc_id", 20)
-        .persist(stagingLevel(spark, sf)))
+        .persist(stagingLevel(spark, sf))
+    }
 
-  /** Materialize the shared layouts eagerly: the shingle table, the
-    * bounded near-dup EDGE set (r20: replaced the output-quadratic full
-    * pair set), and the window table. Bench times this as its own named
-    * entry so the one-time per-corpus costs are never silently
-    * attributed to whichever dedup query happens to run first (the
-    * source of two rounds of phantom "regressions").
-    */
-  def warmSharedLayouts(spark: org.apache.spark.sql.SparkSession, sf: String): Long =
-    warmShingles(spark, sf) + warmEdges(spark, sf) + warmWindows(spark, sf)
-
-  /** Individually warmable components (r20 verdict task 4: the combined
-    * entry re-baselined +46% when the edge layout replaced the pair
-    * build, and nothing localized WHICH stage moved — the bench times
-    * each stage as its own entry so regressions attribute to a stage,
-    * with the combined entry kept as their sum). Order matters: edges
-    * consume the shingle cache, so warmShingles must run (or be run by
-    * warmEdges' own sharedShingles call) first.
-    */
+  /** Eager materialization hooks, one bench entry each (see [[Layouts]]). */
   def warmShingles(spark: org.apache.spark.sql.SparkSession, sf: String): Long =
-    sharedShingles(spark, sf).count()
+    Layouts.warm(spark, sf, "shingles")
   def warmEdges(spark: org.apache.spark.sql.SparkSession, sf: String): Long =
-    sharedClusterEdges(spark, sf).count()
+    Layouts.warm(spark, sf, "edges")
   def warmWindows(spark: org.apache.spark.sql.SparkSession, sf: String): Long =
-    sharedWindows(spark, sf).count()
+    Layouts.warm(spark, sf, "windows")
 
   /** ONE body for both sampled semantic certificates (dedup_semantic_
     * sampled and its curation twin — a single definition so threshold,
@@ -123,10 +103,10 @@ object DedupQueries {
     * as a scalar, and the emitted plan reads the SAME persisted truth
     * frame (r18 verdict task 3 — the old shape unpersisted truth and
     * re-derived it at evaluation, doubling the certificate's dominant
-    * cost). The persisted truth's OWNER is the per-(sf,variant) slot
-    * below: each call releases the previous call's truth and pins its
-    * own (≤ pairBudget rows — a few MB at any corpus size), so storage
-    * is steady-state (one entry per variant, replaced — never
+    * cost). The persisted truth's OWNER is the per-(sf,variant)
+    * `certTruthSlot`: each call releases the previous call's truth and
+    * pins its own (≤ pairBudget rows — a few MB at any corpus size), so
+    * storage is steady-state (one entry per variant, replaced — never
     * accumulating) and every call still pays the full certificate cost
     * honestly (a getOrElseUpdate memo would make the bench's
     * best-of-two time a cache hit). `persistInput` persists `e` across
@@ -136,12 +116,6 @@ object DedupQueries {
     * job and whose rescans are plain columnar scans. An empty sampled
     * truth passes vacuously (both engines emit nothing).
     */
-  /** Memo for the distributed-clustering gate's fixpoint result (the
-    * counted owner of its kept lineage-truncation checkpoint).
-    */
-  private val distClustersCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.DataFrame]
-
   private[graft] val certTruthSlot = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.sql.DataFrame]
   private[graft] def sampledSemanticCertificate(
@@ -725,14 +699,12 @@ object DedupQueries {
     // billion-edge pair set takes) instead of the driver union-find
     // fast path dedup_clusters exercises — same pair layout, same
     // recursive-closure oracle, so the scale path is driver-certified
-    // every round, not just spec-asserted. Memoized per sf (the
-    // q_transitive_closure fixpoint idiom): the label-prop result is
-    // checkpoint-backed (lineage truncation — r20), and the memo is the
-    // kept checkpoint's counted owner, so repeated runs reuse ONE frame
-    // instead of stacking one pinned checkpoint per run.
+    // every round, not just spec-asserted. The checkpoint-backed
+    // label-prop result is owned by Layouts.
     QueryDef("dedup_clusters_distributed",
-      (spark, sf) => distClustersCache.getOrElseUpdate(sf,
-        Dedup.clusters(sharedClusterEdges(spark, sf), collectThreshold = 0L)),
+      (spark, sf) => Layouts.memo(spark, sf, "dist_clusters") {
+        Dedup.clusters(sharedClusterEdges(spark, sf), collectThreshold = 0L)
+      },
       Some("WITH RECURSIVE " + ClosureOracleCtes + """
              |SELECT u AS doc_id, MIN(v) AS rep FROM reach GROUP BY u
              |ORDER BY doc_id""".stripMargin)),

@@ -28,15 +28,10 @@ object EvalQueries {
   /** (doc_id, score, label) for the documents corpus, persisted once
     * per sfDir and shared by the three eval gates (each consumes the
     * same classifier pass + rule-gate pass; a per-call recompute would
-    * hash every token three times per round). Same deliberate
-    * corpus-keyed cache-ownership pattern as
-    * [[Shared.exactTokenCounts]].
+    * hash every token three times per round). Owned by [[Layouts]].
     */
-  private val labeledCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[queries] def labeled(spark: SparkSession, sf: String): DataFrame =
-    labeledCache.getOrElseUpdate(sf, {
+    Layouts.memo(spark, sf, "labeled") {
       val d = load(spark, sf, "documents")
       val scores = graft.ops.TextOps.hashedLinearScore(d, "text", "doc_id")
         .select(col("doc_id"), col("score"))
@@ -58,7 +53,7 @@ object EvalQueries {
             col("ds") >= 2 &&
             col("max_tok") * 5 <= col("n_tokens")).cast("long").as("label"))
         .persist()
-    })
+    }
 
   /** DuckDB replay of [[labeled]]: the FNV-1a/HUGEINT classifier-score
     * CTE (identical text to the text_quality_classifier oracle) joined

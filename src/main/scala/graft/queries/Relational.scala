@@ -134,14 +134,6 @@ object Relational {
 
   private val bucketedCache = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
 
-  /** Final frames of the fixpoint gates (transitive closure, PageRank),
-    * memoized per sfDir: each is an eager checkpoint whose pinned blocks
-    * ARE the data (lineage truncated), so this cache is their declared
-    * storage owner — the shared-layout precedent.
-    */
-  private val fixpointCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** orders + lineitem written once per sfDir as bucketed/sorted tables
     * on the join key (8 buckets) — co-located storage for the
     * shuffle-free join query. Bucketing is an ingest-time layout
@@ -2064,16 +2056,14 @@ object Relational {
     // depth.
     QueryDef("q_transitive_closure",
       (spark, sf) => {
-        // memoized per sfDir: the fixpoint's final frame is an eager
-        // checkpoint whose blocks stay pinned (lineage is truncated —
-        // dropping them would destroy the data), so the TrieMap cache
-        // is its storage OWNER; re-runs reuse instead of re-pinning
-        val closure = fixpointCache.getOrElseUpdate(s"closure:$sf", {
+        // the fixpoint's final frame is an eager checkpoint whose pinned
+        // blocks ARE the data; Layouts owns it, so re-runs reuse it
+        val closure = Layouts.memo(spark, sf, "closure") {
           val edges = Tables.load(spark, sf, "part")
             .filter(col("p_partkey") > 0)
             .select(col("p_partkey").as("node"), expr("p_partkey div 10").as("parent"))
           graft.ops.Graphs.transitiveClosure(edges)
-        })
+        }
         closure
           .filter(col("node") % 97 === 0)
           .select(col("node"), col("ancestor"), col("depth").cast("int").as("depth"))
@@ -2136,15 +2126,14 @@ object Relational {
     // unrolled iterations bit-identically.
     QueryDef("q_pagerank",
       (spark, sf) => {
-        // memoized per sfDir — same checkpoint-block ownership story as
-        // q_transitive_closure
-        val ranks = fixpointCache.getOrElseUpdate(s"pagerank:$sf", {
+        // checkpoint owned by Layouts, as in q_transitive_closure
+        val ranks = Layouts.memo(spark, sf, "pagerank") {
           val edges = load(spark, sf, "lineitem")
             .select((col("l_partkey") * 2).as("src"),
               (col("l_suppkey") * 2 + 1).as("dst"))
             .distinct()
           graft.ops.Graphs.pageRankInt(edges, iters = 3)
-        })
+        }
         ranks
           .filter(col("node") % 31 === 0)
           .orderBy(col("node"))
@@ -2681,7 +2670,7 @@ object Relational {
     // shipped SF with margin (keys up to 2^23).
     QueryDef("q_cheapest_path",
       (spark, sf) => {
-        val dists = fixpointCache.getOrElseUpdate(s"cheapest:$sf", {
+        val dists = Layouts.memo(spark, sf, "cheapest") {
           val p = load(spark, sf, "part").filter(col("p_partkey") >= 1)
           val edges = p.select(col("p_partkey").as("src"),
               expr("p_partkey div 2").as("dst"),
@@ -2691,7 +2680,7 @@ object Relational {
               ((lit(2) + col("p_partkey") % 5) * 64 + 1).cast("long").as("w")))
           val sink = spark.range(1).select(lit(0L).as("node"))
           graft.ops.Graphs.cheapestPaths(edges, sink)
-        })
+        }
         dists
           .filter(col("node") % 41 === 0)
           .select(col("node"), expr("dist div 64").as("dist"),
@@ -2932,7 +2921,7 @@ object Relational {
     // exponential-inlining reason as q_cheapest_path.
     QueryDef("q_widest_path",
       (spark, sf) => {
-        val widths = fixpointCache.getOrElseUpdate(s"widest:$sf", {
+        val widths = Layouts.memo(spark, sf, "widest") {
           val p = load(spark, sf, "part").filter(col("p_partkey") >= 1)
           val edges = p.select(col("p_partkey").as("src"),
               expr("p_partkey div 2").as("dst"),
@@ -2942,7 +2931,7 @@ object Relational {
               (lit(3) + col("p_partkey") % 13).cast("long").as("w")))
           val sink = spark.range(1).select(lit(0L).as("node"))
           graft.ops.Graphs.widestPaths(edges, sink)
-        })
+        }
         widths
           .filter(col("node") % 43 === 0 && col("node") >= 1)
           .select(col("node"), col("dist").cast("int").as("width"))
@@ -2989,7 +2978,7 @@ object Relational {
     // 100× SF span).
     QueryDef("q_k_core",
       (spark, sf) => {
-        val core = fixpointCache.getOrElseUpdate(s"kcore:$sf", {
+        val core = Layouts.memo(spark, sf, "kcore") {
           val p = load(spark, sf, "part").filter(col("p_partkey") >= 1)
           val raw = p.select(col("p_partkey").cast("long").as("x"),
               expr("CAST(p_partkey div 2 AS BIGINT)").as("y"))
@@ -3002,7 +2991,7 @@ object Relational {
             .select(least(col("x"), col("y")).as("a"),
               greatest(col("x"), col("y")).as("b"))
           graft.ops.Graphs.kCore(und, k = 3)
-        })
+        }
         core.orderBy(col("node"))
       },
       Some {

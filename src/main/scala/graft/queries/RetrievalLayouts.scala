@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Shared per-corpus retrieval layouts (r21 verdict task 6 — the
   * shingle-layout pattern applied to the BM25 lineage): the per-probe
@@ -11,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (text_probe_bm25, text_mmr_diversify, eval_ndcg, eval_mrr, and
   * stream_probe_bm25's batch twin), and the streaming serving gate
   * rebuilt its offline impact index inside the micro-batch. Each frame
-  * is computed ONCE per corpus per process and persisted; the bench
+  * is computed ONCE per corpus and persisted, owned by [[Layouts]]; the bench
   * times the materialization as its own named layout entry (included in
   * `total`, like the dedup layout stages), so the one-time cost is
   * never hidden in warmup nor double-charged to whichever consumer runs
@@ -44,10 +45,16 @@ object RetrievalLayouts {
       .select(col("vec_id").as("probe_id"))
       .filter(col("probe_id") % 100 === 7 && col("probe_id") < 2000)
 
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def cached(key: String)(build: => DataFrame): DataFrame =
-    cache.getOrElseUpdate(key,
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  /** Distinct (probe_id, term) of the probe documents — tiny
+    * (|probes| ≈ 20 docs), broadcast into every derived frame, not
+    * worth persisting.
+    */
+  private def probeDistinctTerms(spark: SparkSession, sf: String): DataFrame =
+    load(spark, sf, "documents")
+      .join(broadcast(probes(spark, sf)), col("doc_id") === col("probe_id"))
+      .select(col("probe_id"),
+        explode(array_distinct(
+          filter(split(lower(col("text")), "[^a-z]+"), t => t =!= ""))).as("term"))
 
   /** Per-probe BM25 top-20 over documents (probe_id, doc_id, score, r)
     * — the verified ranking every batch consumer reads (k = 10
@@ -61,25 +68,14 @@ object RetrievalLayouts {
     * stream_probe_bm25 parity gate proves exactly this sum-from-index ≡
     * direct-bm25TopK equality at 6 dp every run).
     */
-  /** Distinct (probe_id, term) of the probe documents — tiny
-    * (|probes| ≈ 20 docs), broadcast into every derived frame, not
-    * worth persisting.
-    */
-  private def probeDistinctTerms(spark: SparkSession, sf: String): DataFrame =
-    load(spark, sf, "documents")
-      .join(broadcast(probes(spark, sf)), col("doc_id") === col("probe_id"))
-      .select(col("probe_id"),
-        explode(array_distinct(
-          filter(split(lower(col("text")), "[^a-z]+"), t => t =!= ""))).as("term"))
-
   def bm25Top20(spark: SparkSession, sf: String): DataFrame =
-    cached(s"bm25top20/$sf") {
+    Layouts.memo(spark, sf, "bm25_scores") {
       val scored = probeDistinctTerms(spark, sf)
         .join(bm25ImpactIndex(spark, sf), Seq("term"))
         .filter(col("doc_id") =!= col("probe_id"))
         .groupBy(col("probe_id"), col("doc_id"))
         .agg(round(sum(col("contrib")), 6).as("score"))
-      graft.ops.Retrieval.rankTopK(scored, "score", 20)
+      graft.ops.Retrieval.rankTopK(scored, "score", 20).persist(MEMORY_AND_DISK)
     }
 
   /** Graded relevance labels shared by eval_ndcg / eval_mrr:
@@ -90,13 +86,14 @@ object RetrievalLayouts {
     * exact, no float path.
     */
   def probeRels(spark: SparkSession, sf: String): DataFrame =
-    cached(s"proberels/$sf") {
+    Layouts.memo(spark, sf, "probe_rels") {
       probeDistinctTerms(spark, sf)
         .join(bm25ImpactIndex(spark, sf).select(col("term"), col("doc_id")),
           Seq("term"))
         .filter(col("doc_id") =!= col("probe_id"))
         .groupBy(col("probe_id"), col("doc_id"))
         .agg(count(lit(1)).as("rel"))
+        .persist(MEMORY_AND_DISK)
     }
 
   /** Full-vocabulary BM25 impact index (term, doc_id, contrib) — the
@@ -106,7 +103,7 @@ object RetrievalLayouts {
     * expression tree the gate previously built inline per run).
     */
   def bm25ImpactIndex(spark: SparkSession, sf: String): DataFrame =
-    cached(s"bm25postings/$sf") {
+    Layouts.memo(spark, sf, "bm25_index") {
       val (k1, b) = (1.2, 0.75)
       val docs = load(spark, sf, "documents")
       val toks = docs.select(col("doc_id"),
@@ -125,6 +122,7 @@ object RetrievalLayouts {
             col("tf") * (k1 + 1) /
             (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
             .as("contrib"))
+        .persist(MEMORY_AND_DISK)
     }
 
   /** Hybrid dense+sparse RRF top-10 (probe_id, fused_rank, doc_id, rrf,
@@ -133,11 +131,11 @@ object RetrievalLayouts {
     * hybridRrf(docs, emb, probes) at the defaults).
     */
   def hybridFused(spark: SparkSession, sf: String): DataFrame =
-    cached(s"hybridfused/$sf") {
+    Layouts.memo(spark, sf, "hybrid_fused") {
       val docs = load(spark, sf, "documents")
       val emb = load(spark, sf, "embeddings")
         .select(col("vec_id").as("doc_id"), col("embedding"))
-      graft.ops.Retrieval.hybridRrf(docs, emb, probes(spark, sf))
+      graft.ops.Retrieval.hybridRrf(docs, emb, probes(spark, sf)).persist(MEMORY_AND_DISK)
     }
 
   /** Per-probe distinct-term counts (probe_id, npt) — eval_mrr's
@@ -148,13 +146,13 @@ object RetrievalLayouts {
     probeDistinctTerms(spark, sf)
       .groupBy(col("probe_id")).agg(count(lit(1)).as("npt"))
 
-  /** Eager materialization hooks — each is a named timed bench entry. */
+  /** Eager materialization hooks, one bench entry each (see [[Layouts]]). */
   def warmBm25Scores(spark: SparkSession, sf: String): Long =
-    bm25Top20(spark, sf).count()
+    Layouts.warm(spark, sf, "bm25_scores")
   def warmProbeRels(spark: SparkSession, sf: String): Long =
-    probeRels(spark, sf).count()
+    Layouts.warm(spark, sf, "probe_rels")
   def warmBm25Index(spark: SparkSession, sf: String): Long =
-    bm25ImpactIndex(spark, sf).count()
+    Layouts.warm(spark, sf, "bm25_index")
   def warmHybridFused(spark: SparkSession, sf: String): Long =
-    hybridFused(spark, sf).count()
+    Layouts.warm(spark, sf, "hybrid_fused")
 }

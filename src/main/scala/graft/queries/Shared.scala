@@ -125,17 +125,15 @@ object Shared {
     * it three ways (top-20 collect, join side, total mass), and a
     * per-call persist leaked one cached copy per gate per run (neither
     * caller could safely unpersist what the other might still need).
-    * The shared-layout TrieMap is the DedupQueries.sharedShingles
-    * precedent: one deliberate corpus-keyed cache entry, bounded.
+    * Owned by [[Layouts]].
     */
-  private val tokenCountsCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
   def exactTokenCounts(spark: SparkSession, sf: String): DataFrame =
-    tokenCountsCache.getOrElseUpdate(sf,
+    Layouts.memo(spark, sf, "token_counts") {
       Tables.load(spark, sf, "documents")
         .select(explode(split(col("text"), " ")).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("exact_cnt"))
-        .persist())
+        .persist()
+    }
 
   /** Assemble the count-min error-bound gate around an estimates frame
     * `(tok, est_cnt)`: emit the top-20 exact side only while every

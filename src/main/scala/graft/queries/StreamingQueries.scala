@@ -28,21 +28,6 @@ object StreamingQueries {
 
   private val stagedCache = scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Run `body` (which starts a streaming query) with a reduced
-    * `spark.sql.shuffle.partitions`, restoring the session value after.
-    *
-    * A stateful streaming query instantiates one state store PER state
-    * partition PER micro-batch (a stream-stream join keeps four per
-    * partition), and the partition count is frozen from
-    * `spark.sql.shuffle.partitions` when the query first starts. The
-    * gate's state fits a handful of partitions, so paying 32×4 store
-    * opens+commits per micro-batch is pure fixed overhead — measured:
-    * the sf0.001 and sf0.1 runs cost the SAME wall time, i.e. ~100% of
-    * it is state-store machinery, not rows. A real deployment sizes
-    * this to throughput (state partitions ≈ cores busy with state work);
-    * the principle — state partitions are a first-class knob decoupled
-    * from the batch shuffle width — is exactly what this helper encodes.
-    */
   /** Distributed stream/batch parity gate. The old form collected both
     * ranked lists to the driver and compared Sets — bounded at
     * k·|probes|, but |probes| scales with the corpus (1% of doc_ids),
@@ -72,6 +57,21 @@ object StreamingQueries {
       .foreach(_.unpersist(blocking = false))
   }
 
+  /** Run `body` (which starts a streaming query) with a reduced
+    * `spark.sql.shuffle.partitions`, restoring the session value after.
+    *
+    * A stateful streaming query instantiates one state store PER state
+    * partition PER micro-batch (a stream-stream join keeps four per
+    * partition), and the partition count is frozen from
+    * `spark.sql.shuffle.partitions` when the query first starts. The
+    * gate's state fits a handful of partitions, so paying 32×4 store
+    * opens+commits per micro-batch is pure fixed overhead — measured:
+    * the sf0.001 and sf0.1 runs cost the SAME wall time, i.e. ~100% of
+    * it is state-store machinery, not rows. A real deployment sizes
+    * this to throughput (state partitions ≈ cores busy with state work);
+    * the principle — state partitions are a first-class knob decoupled
+    * from the batch shuffle width — is exactly what this helper encodes.
+    */
   private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)
@@ -140,29 +140,6 @@ object StreamingQueries {
       dir.toString
     })
 
-  /** Events staged as `n` time-ordered parquet chunks (ascending
-    * modification times, so the file source replays them oldest-first
-    * one per micro-batch) — the staging for queries that prove
-    * WATERMARK EVICTION: state must be dropped while later chunks are
-    * still arriving, which a single-file single-batch staging can never
-    * show. Chunks are written from the normalized-ts frame so the
-    * stream schema is encoding-stable.
-    */
-  /** With `sentinel = true`, two trailing chunks hold synthetic events
-    * 2 h and 4 h past the corpus maximum, whose only job is to advance
-    * the final watermark beyond every real event so append-mode
-    * operators (outer-join null emission, final windows) can flush the
-    * tail of their state before the bounded stream ends. Two, because
-    * eviction in batch k runs with the watermark committed after batch
-    * k−1 — the first sentinel advances, the second triggers the flush.
-    * The sentinels carry REAL event types (one 'error' + one 'purchase'
-    * row each): Catalyst pushes type filters BELOW the EventTimeWatermark
-    * node, so a row with a synthetic type would be dropped before the
-    * watermark ever observed it and the watermark would stall at the
-    * filtered stream's own maximum (observed: the last unmatched left
-    * row was never flushed). Consumers exclude sentinels by their
-    * negative `event_id` AFTER the join.
-    */
   /** Documents staged as `n` doc_id-ordered chunks with ascending
     * mtimes — batches ARRIVE in id order, so the streaming curation
     * pipeline's mapping-assigned dense dids coincide with the one-shot
@@ -217,6 +194,30 @@ object StreamingQueries {
         required = true)
       d.toString
     })
+
+  /** Events staged as `n` time-ordered parquet chunks (ascending
+    * modification times, so the file source replays them oldest-first
+    * one per micro-batch) — the staging for queries that prove
+    * WATERMARK EVICTION: state must be dropped while later chunks are
+    * still arriving, which a single-file single-batch staging can never
+    * show. Chunks are written from the normalized-ts frame so the
+    * stream schema is encoding-stable.
+    *
+    * With `sentinel = true`, two trailing chunks hold synthetic events
+    * 2 h and 4 h past the corpus maximum, whose only job is to advance
+    * the final watermark beyond every real event so append-mode
+    * operators (outer-join null emission, final windows) can flush the
+    * tail of their state before the bounded stream ends. Two, because
+    * eviction in batch k runs with the watermark committed after batch
+    * k−1 — the first sentinel advances, the second triggers the flush.
+    * The sentinels carry REAL event types (one 'error' + one 'purchase'
+    * row each): Catalyst pushes type filters BELOW the EventTimeWatermark
+    * node, so a row with a synthetic type would be dropped before the
+    * watermark ever observed it and the watermark would stall at the
+    * filtered stream's own maximum (observed: the last unmatched left
+    * row was never flushed). Consumers exclude sentinels by their
+    * negative `event_id` AFTER the join.
+    */
   private def stagedTimeChunks(
       spark: SparkSession, sf: String, n: Int, sentinel: Boolean = false): String =
     chunkedCache.getOrElseUpdate(s"$sf/events/$n/$sentinel", {
@@ -311,6 +312,8 @@ object StreamingQueries {
     * including its foreachBatch batch jobs and staging, executes with
     * the volume-derived shuffle width; the session's batch width is
     * restored before the returned (tiny, ordered) result frame runs.
+    * Gate bodies do not wrap again: a nested call would derive its cap
+    * from the already-overridden width.
     */
   lazy val defs: Seq[QueryDef] = rawDefs.map { d =>
     d.copy(fn = (spark, sf) =>
@@ -695,23 +698,21 @@ object StreamingQueries {
             real.unionByName(sentinels), "ts", "user_id", "value",
             gapSeconds = 1800, stateTimeoutMs = 3600L * 1000)
           val table = s"stream_sess_${counter.incrementAndGet()}"
-          withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-            val q = sessions.toDF().writeStream.format("memory").queryName(table)
-              .outputMode("append")
-              .trigger(Trigger.ProcessingTime(100L)).start()
-            try {
-              // all files fit one micro-batch; poll the sink until the batch
-              // lands and the count is stable
-              val deadline = System.currentTimeMillis + sinkDeadlineMs
-              var n = -1L
-              var stable = 0
-              while (stable < 2 && System.currentTimeMillis < deadline) {
-                Thread.sleep(150)
-                val c = spark.table(table).count()
-                if (c > 0 && c == n) stable += 1 else { stable = 0; n = c }
-              }
-            } finally q.stop()
-          }
+          val q = sessions.toDF().writeStream.format("memory").queryName(table)
+            .outputMode("append")
+            .trigger(Trigger.ProcessingTime(100L)).start()
+          try {
+            // all files fit one micro-batch; poll the sink until the batch
+            // lands and the count is stable
+            val deadline = System.currentTimeMillis + sinkDeadlineMs
+            var n = -1L
+            var stable = 0
+            while (stable < 2 && System.currentTimeMillis < deadline) {
+              Thread.sleep(150)
+              val c = spark.table(table).count()
+              if (c > 0 && c == n) stable += 1 else { stable = 0; n = c }
+            }
+          } finally q.stop()
           spark.table(table)
             .filter(col("sessionStart") <= lit(maxTs)) // real sessions only
             .groupBy(col("userId"))
@@ -768,11 +769,9 @@ object StreamingQueries {
         val agg = corpusWins.join(bench, Seq("w"))
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contaminated_windows"))
         val table = s"stream_dc_${counter.incrementAndGet()}"
-        withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-          val q = agg.writeStream.format("memory").queryName(table)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          try q.awaitTermination() finally q.stop()
-        }
+        val q = agg.writeStream.format("memory").queryName(table)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally q.stop()
         spark.table(table).orderBy(col("doc_id"))
       },
       Some("""WITH toks AS (SELECT doc_id, string_split(text,' ') t FROM documents),
@@ -814,11 +813,9 @@ object StreamingQueries {
           .groupBy(col("a"), col("b"))
           .agg(count(lit(1)).as("inter"), max(col("na")).as("na"), max(col("nb")).as("nb"))
         val table = s"stream_if_${counter.incrementAndGet()}"
-        withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-          val q = inter.writeStream.format("memory").queryName(table)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          try q.awaitTermination() finally q.stop()
-        }
+        val q = inter.writeStream.format("memory").queryName(table)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally q.stop()
         spark.table(table)
           .withColumn("jaccard",
             col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
@@ -860,12 +857,10 @@ object StreamingQueries {
         val joined = errors.join(signups,
           expr("bucket = s_bucket AND ts >= s_ts AND ts < s_ts + interval 15 minutes"))
         val table = s"stream_ij_${counter.incrementAndGet()}"
-        withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-          val q = joined.select(col("event_id"), col("signup_id"))
-            .writeStream.format("memory").queryName(table)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          try q.awaitTermination() finally q.stop()
-        }
+        val q = joined.select(col("event_id"), col("signup_id"))
+          .writeStream.format("memory").queryName(table)
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally q.stop()
         spark.table(table).orderBy(col("event_id"), col("signup_id"))
       },
       Some("""SELECT e.event_id, s.event_id AS signup_id
@@ -902,20 +897,18 @@ object StreamingQueries {
           expr("user_id = p_user AND p_ts >= ts AND p_ts < ts + interval 30 minutes"),
           "leftOuter")
         val table = s"stream_oj_${counter.incrementAndGet()}"
-        withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-          // NO sentinel filter inside the stream: a predicate on the
-          // left side's columns is pushed below the EventTimeWatermark
-          // node, which would drop the sentinel rows before the
-          // watermark observed them and stall it at the real errors'
-          // maximum (observed: the last unmatched left never flushed).
-          // Sentinels flow through the join and are excluded from the
-          // BATCH read-back below instead.
-          val q = joined
-            .select(col("event_id"), coalesce(col("p_event_id"), lit(-1L)).as("p_event_id"))
-            .writeStream.format("memory").queryName(table)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          try q.awaitTermination() finally q.stop()
-        }
+        // NO sentinel filter inside the stream: a predicate on the
+        // left side's columns is pushed below the EventTimeWatermark
+        // node, which would drop the sentinel rows before the
+        // watermark observed them and stall it at the real errors'
+        // maximum (observed: the last unmatched left never flushed).
+        // Sentinels flow through the join and are excluded from the
+        // BATCH read-back below instead.
+        val q = joined
+          .select(col("event_id"), coalesce(col("p_event_id"), lit(-1L)).as("p_event_id"))
+          .writeStream.format("memory").queryName(table)
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally q.stop()
         spark.table(table).filter(col("event_id") >= 0)
           .orderBy(col("event_id"), col("p_event_id"))
       },
@@ -1304,41 +1297,39 @@ object StreamingQueries {
             real, "ts", "user_id", "event_id", "event_type",
             Seq("signup", "view", "click", "purchase"))
           val table = s"stream_funnel_${counter.incrementAndGet()}"
-          withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-            // transformWithState queries do not quiesce under
-            // awaitTermination (see StreamingSpec / stream_sessionize):
-            // run a short-period trigger and poll the sink until the
-            // batch lands and the row count is stable
-            val q = flags.toDF().writeStream.format("memory").queryName(table)
-              .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
-            try {
-              // completeness anchor: every stage-typed user must have
-              // reached the sink before the flags are aggregated — two
-              // equal counts 150 ms apart can both be sampled between
-              // micro-batches, so count stability alone is not proof
-              val expectedUsers = fixTs(spark.read.parquet(path(sf, "events")))
-                .filter(col("event_type")
-                  .isin("signup", "view", "click", "purchase"))
-                .select(col("user_id")).distinct().count()
-              val deadline = System.currentTimeMillis + sinkDeadlineMs
-              var n = -1L
-              var stable = 0
-              var users = -1L
-              while ((stable < 2 || users != expectedUsers) &&
-                  System.currentTimeMillis < deadline) {
-                Thread.sleep(150)
-                val c = spark.table(table).count()
-                if (c > 0 && c == n) stable += 1 else { stable = 0; n = c }
-                if (stable >= 2)
-                  users = spark.table(table).select(col("userId")).distinct().count()
-              }
-              // a partial sink must fail loudly, not surface later as
-              // an opaque oracle hash mismatch
-              if (users != expectedUsers) throw new IllegalStateException(
-                s"stream_funnel sink incomplete after ${sinkDeadlineMs / 1000}s: " +
-                  s"$users of $expectedUsers users present")
-            } finally q.stop()
-          }
+          // transformWithState queries do not quiesce under
+          // awaitTermination (see StreamingSpec / stream_sessionize):
+          // run a short-period trigger and poll the sink until the
+          // batch lands and the row count is stable
+          val q = flags.toDF().writeStream.format("memory").queryName(table)
+            .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
+          try {
+            // completeness anchor: every stage-typed user must have
+            // reached the sink before the flags are aggregated — two
+            // equal counts 150 ms apart can both be sampled between
+            // micro-batches, so count stability alone is not proof
+            val expectedUsers = fixTs(spark.read.parquet(path(sf, "events")))
+              .filter(col("event_type")
+                .isin("signup", "view", "click", "purchase"))
+              .select(col("user_id")).distinct().count()
+            val deadline = System.currentTimeMillis + sinkDeadlineMs
+            var n = -1L
+            var stable = 0
+            var users = -1L
+            while ((stable < 2 || users != expectedUsers) &&
+                System.currentTimeMillis < deadline) {
+              Thread.sleep(150)
+              val c = spark.table(table).count()
+              if (c > 0 && c == n) stable += 1 else { stable = 0; n = c }
+              if (stable >= 2)
+                users = spark.table(table).select(col("userId")).distinct().count()
+            }
+            // a partial sink must fail loudly, not surface later as
+            // an opaque oracle hash mismatch
+            if (users != expectedUsers) throw new IllegalStateException(
+              s"stream_funnel sink incomplete after ${sinkDeadlineMs / 1000}s: " +
+                s"$users of $expectedUsers users present")
+          } finally q.stop()
           spark.table(table)
             .groupBy(col("userId"))
             .agg(max(col("f1")).as("u1"), max(col("f2")).as("u2"),
@@ -1378,24 +1369,22 @@ object StreamingQueries {
           val filled = graft.streaming.StreamingIngest.gapFill(
             real, "ts", "user_id", "event_id", "reading_cents")
           val table = s"stream_gf_${counter.incrementAndGet()}"
-          withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-            // transformWithState queries do not quiesce under
-            // awaitTermination (see stream_funnel): short-period
-            // trigger + poll, anchored on the exact expected row count
-            val expected = spark.read.parquet(path(sf, "events")).count()
-            val q = filled.toDF().writeStream.format("memory").queryName(table)
-              .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
-            try {
-              val deadline = System.currentTimeMillis + sinkDeadlineMs
-              var n = -1L
-              while (n != expected && System.currentTimeMillis < deadline) {
-                Thread.sleep(150)
-                n = spark.table(table).count()
-              }
-              if (n != expected) throw new IllegalStateException(
-                s"stream_gap_fill sink incomplete after ${sinkDeadlineMs / 1000}s: $n of $expected rows")
-            } finally q.stop()
-          }
+          // transformWithState queries do not quiesce under
+          // awaitTermination (see stream_funnel): short-period
+          // trigger + poll, anchored on the exact expected row count
+          val expected = spark.read.parquet(path(sf, "events")).count()
+          val q = filled.toDF().writeStream.format("memory").queryName(table)
+            .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
+          try {
+            val deadline = System.currentTimeMillis + sinkDeadlineMs
+            var n = -1L
+            while (n != expected && System.currentTimeMillis < deadline) {
+              Thread.sleep(150)
+              n = spark.table(table).count()
+            }
+            if (n != expected) throw new IllegalStateException(
+              s"stream_gap_fill sink incomplete after ${sinkDeadlineMs / 1000}s: $n of $expected rows")
+          } finally q.stop()
           spark.table(table).select(
             col("eventId").as("event_id"), col("userId").as("user_id"),
             col("readingCents").as("reading_cents"),
@@ -2061,24 +2050,22 @@ object StreamingQueries {
           val attributed = graft.streaming.StreamingIngest.attributePurchases(
             real, "ts", "user_id", "event_id", "event_type", "value")
           val table = s"stream_attr_${counter.incrementAndGet()}"
-          withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-            val q = attributed.toDF().writeStream.format("memory")
-              .queryName(table)
-              .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
-            try {
-              val expected = Tables.load(spark, sf, "events")
-                .filter(col("event_type") === "purchase").count()
-              val deadline = System.currentTimeMillis + sinkDeadlineMs
-              var n = -1L
-              while (n != expected && System.currentTimeMillis < deadline) {
-                Thread.sleep(150)
-                n = spark.table(table).count()
-              }
-              if (n != expected) throw new IllegalStateException(
-                s"stream_attribution sink incomplete after ${sinkDeadlineMs / 1000}s: " +
-                  s"$n of $expected purchases present")
-            } finally q.stop()
-          }
+          val q = attributed.toDF().writeStream.format("memory")
+            .queryName(table)
+            .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
+          try {
+            val expected = Tables.load(spark, sf, "events")
+              .filter(col("event_type") === "purchase").count()
+            val deadline = System.currentTimeMillis + sinkDeadlineMs
+            var n = -1L
+            while (n != expected && System.currentTimeMillis < deadline) {
+              Thread.sleep(150)
+              n = spark.table(table).count()
+            }
+            if (n != expected) throw new IllegalStateException(
+              s"stream_attribution sink incomplete after ${sinkDeadlineMs / 1000}s: " +
+                s"$n of $expected purchases present")
+          } finally q.stop()
           spark.table(table)
             .select(col("cents"),
               explode(map(
@@ -2127,11 +2114,9 @@ object StreamingQueries {
             sum(when(col("score") < col("t"), lit(1L) - col("label"))
               .otherwise(0L)).as("tn"))
         val table = s"stream_prc_${counter.incrementAndGet()}"
-        withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-          val q = agg.writeStream.format("memory").queryName(table)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          try q.awaitTermination() finally q.stop()
-        }
+        val q = agg.writeStream.format("memory").queryName(table)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally q.stop()
         EvalQueries.prMetrics(spark.table(table))
       },
       Some(EvalQueries.PrCurveOracle)),
@@ -2168,17 +2153,15 @@ object StreamingQueries {
             .ewmaLevels(stream, "ts", "event_type", sentinelHourFrom)
           val table = s"stream_ewma_${counter.incrementAndGet()}"
           val nTypes = df.select(col("event_type")).distinct().count()
-          withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-            val q = levels.toDF().writeStream.format("memory").queryName(table)
-              .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
-            try {
-              // completeness anchor: exactly one final readout per type
-              // (the sentinel guarantees each type emits once)
-              val deadline = System.currentTimeMillis + sinkDeadlineMs
-              while (spark.table(table).count() < nTypes &&
-                System.currentTimeMillis < deadline) Thread.sleep(150)
-            } finally q.stop()
-          }
+          val q = levels.toDF().writeStream.format("memory").queryName(table)
+            .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
+          try {
+            // completeness anchor: exactly one final readout per type
+            // (the sentinel guarantees each type emits once)
+            val deadline = System.currentTimeMillis + sinkDeadlineMs
+            while (spark.table(table).count() < nTypes &&
+              System.currentTimeMillis < deadline) Thread.sleep(150)
+          } finally q.stop()
           spark.table(table)
             .select(col("eventType").as("event_type"),
               col("nHours").cast("int").as("n_hours"),
@@ -2219,15 +2202,13 @@ object StreamingQueries {
             .holtLevels(stream, "ts", "event_type", sentinelHourFrom)
           val table = s"stream_holt_${counter.incrementAndGet()}"
           val nTypes = df.select(col("event_type")).distinct().count()
-          withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-            val q = levels.toDF().writeStream.format("memory").queryName(table)
-              .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
-            try {
-              val deadline = System.currentTimeMillis + sinkDeadlineMs
-              while (spark.table(table).count() < nTypes &&
-                System.currentTimeMillis < deadline) Thread.sleep(150)
-            } finally q.stop()
-          }
+          val q = levels.toDF().writeStream.format("memory").queryName(table)
+            .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
+          try {
+            val deadline = System.currentTimeMillis + sinkDeadlineMs
+            while (spark.table(table).count() < nTypes &&
+              System.currentTimeMillis < deadline) Thread.sleep(150)
+          } finally q.stop()
           spark.table(table)
             .select(col("eventType").as("event_type"),
               col("nHours").cast("int").as("n_hours"),
@@ -2280,15 +2261,13 @@ object StreamingQueries {
               sentinelFrom, 2944439L)
           val table = s"stream_sprt_${counter.incrementAndGet()}"
           val nTypes = df.select(col("event_type")).distinct().count()
-          withStatePartitions(spark, adaptivePartitions(spark, sf)) {
-            val q = monitors.toDF().writeStream.format("memory").queryName(table)
-              .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
-            try {
-              val deadline = System.currentTimeMillis + sinkDeadlineMs
-              while (spark.table(table).count() < nTypes &&
-                System.currentTimeMillis < deadline) Thread.sleep(150)
-            } finally q.stop()
-          }
+          val q = monitors.toDF().writeStream.format("memory").queryName(table)
+            .outputMode("append").trigger(Trigger.ProcessingTime(100L)).start()
+          try {
+            val deadline = System.currentTimeMillis + sinkDeadlineMs
+            while (spark.table(table).count() < nTypes &&
+              System.currentTimeMillis < deadline) Thread.sleep(150)
+          } finally q.stop()
           spark.table(table)
             .select(col("eventType").as("event_type"),
               col("nTotal").as("n_total"), col("llrFinal").as("llr_final"),

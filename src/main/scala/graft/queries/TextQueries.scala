@@ -1995,7 +1995,7 @@ object TextQueries {
     // (#nodes = distinct content words ≪ corpus).
     QueryDef("text_textrank_keywords",
       (spark, sf) => {
-        val ranks = textrankCache.getOrElseUpdate(sf, {
+        val ranks = Layouts.memo(spark, sf, "textrank") {
           val pairs = load(spark, sf, "documents")
             .withColumn("arr", split(lower(col("text")), " "))
             .select(explode(expr(
@@ -2009,7 +2009,7 @@ object TextQueries {
           val und = pairs.unionByName(
             pairs.select(col("dst").as("src"), col("src").as("dst")))
           graft.ops.Graphs.pageRankInt(und, iters = 3)
-        })
+        }
         ranks.select(col("node").as("term"), col("rank"))
           .orderBy(col("rank").desc, col("term"))
           .limit(20)
@@ -2046,13 +2046,4 @@ object TextQueries {
            |ORDER BY rank DESC, term LIMIT 20""".stripMargin
       }),
   )
-
-  /** Final TextRank frames memoized per sfDir — each is an eager
-    * checkpoint whose pinned blocks ARE the data, so this cache is
-    * their declared storage owner (the Relational.fixpointCache
-    * precedent).
-    */
-  private val textrankCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.DataFrame]
 }

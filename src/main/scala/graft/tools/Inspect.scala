@@ -22,30 +22,22 @@ object Inspect {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // pseudo-name for the shared bounded-edge layout (not a registry
-    // query — the bench times it via warmEdges): run1 warms a local
-    // shingle staging table, so run2 isolates the edge build itself
-    var inspectShingles: org.apache.spark.sql.DataFrame = null
+    // query — the bench times it as layout_edges): run1 warms the shared
+    // shingle layout, so run2 isolates the edge build itself
     val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
       if (name == "layout_edges_frame") { (s, sf) =>
-        if (inspectShingles == null) {
-          inspectShingles = graft.ops.Dedup.shingleTable(
-            graft.queries.Tables.load(s, sf, "documents"), "text", "doc_id", 5).persist()
-          inspectShingles.count()
-        }
         graft.ops.Dedup.ngramJaccardEdgesBounded(
           graft.queries.Tables.load(s, sf, "documents"), "text", "doc_id",
-          k = 5, minJaccard = 0.8, precomputedShingles = Some(inspectShingles))
+          k = 5, minJaccard = 0.8,
+          precomputedShingles = Some(graft.queries.Layouts.layout("shingles").frame(s, sf)))
       } else SparkEntry.queries(name)
     // GRAFT_WARM_RETRIEVAL=1: materialize the shared retrieval layouts
     // first (the state the bench's layout_bm25_* entries establish), so
     // the explained consumer plan shows the InMemoryTableScan it
     // actually executes in the suite, not the one-time build lineage
-    if (sys.env.get("GRAFT_WARM_RETRIEVAL").contains("1")) {
-      graft.queries.RetrievalLayouts.warmBm25Index(spark, sfDir): Unit
-      graft.queries.RetrievalLayouts.warmBm25Scores(spark, sfDir): Unit
-      graft.queries.RetrievalLayouts.warmProbeRels(spark, sfDir): Unit
-      graft.queries.RetrievalLayouts.warmHybridFused(spark, sfDir): Unit
-    }
+    if (sys.env.get("GRAFT_WARM_RETRIEVAL").contains("1"))
+      Seq("bm25_index", "bm25_scores", "probe_rels", "hybrid_fused")
+        .foreach(graft.queries.Layouts.warm(spark, sfDir, _))
     if (explain) fn(spark, sfDir).explain("formatted")
     (1 to 2).foreach { i =>
       val t0 = System.nanoTime()
@@ -57,78 +49,6 @@ object Inspect {
       spark.sparkContext.setJobDescription(null)
       println(f"[$name] run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s (noop sink)")
     }
-    spark.stop()
-  }
-}
-
-/** Stage-level profiling scratchpad (edit as needed per investigation). */
-object Prof {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8").config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import graft.ops.Retrieval
-    import org.apache.spark.sql.functions._
-    val sf = "/root/testdata/sf0.001"
-    val docs = graft.queries.Tables.load(spark, sf, "documents")
-    // Same fixed probe budget as the eval/streaming gates (ids ≡ 7 mod
-    // 100 below the sf0.1 population bound) — without the < 2000 cap
-    // this diagnostics tool would examine a corpus-scaled probe set
-    // that diverges from what the gates run above sf0.1.
-    val probes = graft.queries.Tables.load(spark, sf, "embeddings")
-      .select(col("vec_id").as("probe_id"))
-      .filter(col("probe_id") % 100 === 7 && col("probe_id") < 2000)
-    val (k1, b) = (1.2, 0.75)
-    val toks = docs.select(col("doc_id"),
-      filter(split(lower(col("text")), "[^a-z]+"), t => t =!= "").as("toks"))
-    val dl = toks.select(col("doc_id"), size(col("toks")).cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
-    val terms = toks.select(col("doc_id"), explode(col("toks")).as("term"))
-    val tf = terms.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val postings = tf.join(dfreq, Seq("term")).join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"), col("doc_id"),
-        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          col("tf") * (k1 + 1) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
-          .as("contrib"))
-    val probeTerms = docs.select(col("doc_id").as("probe_id"),
-        explode(array_distinct(filter(split(lower(col("text")), "[^a-z]+"), t => t =!= ""))).as("term"))
-      .join(broadcast(probes), Seq("probe_id"))
-    val dir = java.nio.file.Files.createTempDirectory("prof_docs")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    val dSchema = spark.read.parquet(s"$sf/documents.parquet").schema
-    val probeTermStream = spark.readStream.schema(dSchema).parquet(dir.toString)
-      .filter(col("doc_id") % 100 === 7 && col("doc_id") < 2000)
-      .select(col("doc_id").as("probe_id"),
-        explode(array_distinct(filter(split(lower(col("text")), "[^a-z]+"), t => t =!= ""))).as("term"))
-      .join(broadcast(probes), Seq("probe_id"))
-    val scored = probeTermStream.join(postings, Seq("term"))
-      .filter(col("doc_id") =!= col("probe_id"))
-      .groupBy(col("probe_id"), col("doc_id"))
-      .agg(round(sum(col("contrib")), 6).as("score"))
-    val q = scored.writeStream.format("memory").queryName("pbm")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    println("sink rows: " + spark.table("pbm").count())
-    val streamRanked = Retrieval.rankTopK(spark.table("pbm"), "score", 20)
-      .select(col("probe_id"), col("r"), col("doc_id"), col("score"))
-    val batchRanked = Retrieval.bm25TopK(docs, probes, k = 20)
-      .select(col("probe_id"), col("r"), col("doc_id"), col("score").as("score"))
-    val registered = graft.SparkEntry.queries("stream_probe_bm25")(spark, sf)
-    println("registered query rows: " + registered.count())
-    val d1 = streamRanked.exceptAll(batchRanked).withColumn("side", lit("idx"))
-    val d2 = batchRanked.exceptAll(streamRanked).withColumn("side", lit("op"))
-    val diff = d1.unionAll(d2)
-    println("diff rows: " + diff.count())
-    diff.orderBy("probe_id", "r", "side").show(40, false)
     spark.stop()
   }
 }

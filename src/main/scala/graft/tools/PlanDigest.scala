@@ -98,7 +98,7 @@ object PlanDigest {
     // consumer executes in (the bench's layout_shared_shingles entry
     // warms them first); cold digests measured cache state, not
     // structure (r21)
-    try graft.queries.DedupQueries.warmSharedLayouts(spark, sfDir)
+    try Seq("shingles", "edges", "windows").foreach(graft.queries.Layouts.warm(spark, sfDir, _))
     catch { case e: Throwable =>
       System.err.println(s"[plandigest] layout warm failed: ${e.getMessage}")
     }

@@ -6,12 +6,12 @@ import graft.SparkSpec
   * must not outlive their query. Each representative query — the ones
   * whose operators persist internally (executor runs, fixpoints,
   * similarity codebooks, incremental dedup) — is run once to warm any
-  * lazily-created shared layouts (TrieMap caches, memoized scenarios:
-  * those are intentional, counted owners), then run again; at steady
-  * state a query may not grow `getPersistentRDDs` at all. A regression
-  * here is exactly the shape that inflated the r9 driver bench: one
-  * pinned entry per run, times 173 queries, evicting execution memory
-  * at the tail of the suite.
+  * lazily-created shared layouts (frames owned by `Layouts`, memoized
+  * scenarios: those are intentional, counted owners), then run again;
+  * at steady state a query may not grow `getPersistentRDDs` at all. A
+  * regression here is exactly the shape that inflated the r9 bench:
+  * one pinned entry per run, times 173 queries, evicting execution
+  * memory at the tail of the suite.
   */
 class PersistHygieneSpec extends SparkSpec {
 
@@ -37,8 +37,8 @@ class PersistHygieneSpec extends SparkSpec {
     "eval_auc",              // shared labeled-scores cache (counted owner)
     "sim_ann_index_append",  // ivfIndex's training persist (op-released)
                              // + fresh index build/append per run
-    "text_textrank_keywords" // pageRankInt fixpoint memoized in
-                             // textrankCache (counted owner — warmed pass 1)
+    "text_textrank_keywords" // pageRankInt fixpoint owned by Layouts
+                             // (counted owner — warmed pass 1)
   )
 
   test("certificate truth slot: steady state pins at most one frame per " +
@@ -78,8 +78,8 @@ class PersistHygieneSpec extends SparkSpec {
   test("steady state: a second run of a query adds no persistent RDDs") {
     for (name <- representatives) {
       val fn = graft.SparkEntry.queries(name)
-      // pass 1: warm shared layouts this query creates lazily (TrieMap
-      // caches / memoized scenarios) — those have owners and stay
+      // pass 1: warm shared layouts this query creates lazily (Layouts
+      // frames / memoized scenarios) — those have owners and stay
       fn(spark, Sf).queryExecution.toRdd.foreach(_ => ())
       val baseline = spark.sparkContext.getPersistentRDDs.keySet
       // pass 2: steady state — anything NEW pinned now has no owner

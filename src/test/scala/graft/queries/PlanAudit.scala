@@ -1196,7 +1196,7 @@ class PlanAudit extends SparkSpec {
     // state, its own defect). Warming is idempotent, making the audit
     // deterministic; the cold-lineage failure mode is covered by the
     // seeded-mutation test below.
-    DedupQueries.warmSharedLayouts(spark, Sf)
+    Seq("shingles", "edges", "windows").foreach(Layouts.warm(spark, Sf, _))
     for ((q, ceiling) <- ExchangeCeilings.toSeq.sortBy(_._1)) {
       val df = graft.SparkEntry.queries(q)(spark, Sf)
       // STRUCTURAL counts of what would execute (r21,
@@ -1227,7 +1227,7 @@ class PlanAudit extends SparkSpec {
     // the bounded-edge lineage (signature groupBy + dual window
     // orderings + hashed verify joins) is materialized, not re-planned
     // per textual reference.
-    DedupQueries.warmSharedLayouts(spark, Sf)
+    Seq("shingles", "edges", "windows").foreach(Layouts.warm(spark, Sf, _))
     val warmPlan = graft.SparkEntry.queries("corpus_split_leakproof")(spark, Sf)
       .queryExecution.executedPlan
     assert(warmPlan.toString.contains("InMemoryTableScan"),
