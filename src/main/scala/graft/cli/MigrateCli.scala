@@ -282,19 +282,24 @@ object MigrateCli {
       }
       spec.name -> result
     }
-    if (args.parallel <= 1) ordered.map(runOne).toMap
-    else {
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val (levels, _) =
-        registry.resolveLevels(selected.map(_.spec.name), noDeps = args.noDeps)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(args.parallel)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try levels.flatMap { level =>
-        Await.result(Future.sequence(level.map(s => Future(runOne(s)))), Duration.Inf)
-      }.toMap
-      finally pool.shutdown()
-    }
+    // the run owns what its executor and reference store pinned: both are
+    // released before returning, once every write and orphan report is
+    // done (the returned frames stay valid plans and recompute if read)
+    try {
+      if (args.parallel <= 1) ordered.map(runOne).toMap
+      else {
+        import scala.concurrent.duration.Duration
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        val (levels, _) =
+          registry.resolveLevels(selected.map(_.spec.name), noDeps = args.noDeps)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(args.parallel)
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+        try levels.flatMap { level =>
+          Await.result(Future.sequence(level.map(s => Future(runOne(s)))), Duration.Inf)
+        }.toMap
+        finally pool.shutdown()
+      }
+    } finally { executor.release(); refs.release() }
   }
 
   def main(argv: Array[String]): Unit = {

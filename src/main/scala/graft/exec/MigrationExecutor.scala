@@ -79,6 +79,14 @@ final class TransformContext(
   }
 }
 
+/** A delta whose compute half has run ([[MigrationExecutor.computeDelta]]):
+  * `result` describes the evaluated, pinned delta; `commit` performs its
+  * durable writes — mapping record, then data — and returns `result`.
+  */
+final class StagedDelta private[exec] (val result: MigrationResult, writes: () => Unit) {
+  def commit(): MigrationResult = { writes(); result }
+}
+
 final case class MigrationResult(
     migrated: Long,
     orphans: DataFrame,
@@ -179,7 +187,13 @@ final class MigrationExecutor(
     // downstream derives from stable data. Generation-pointer sinks keep
     // old snapshots readable and skip all of this.
     val snapshotUnstable = snapshot.nonEmpty && !dest.snapshotIsStableAcrossWrites
-    val incoming = if (snapshotUnstable) MigrationExecutor.barrier(incoming0) else incoming0
+    // Either way `incoming` is evaluated exactly once, here, before any
+    // orphan, merge, mapping or write plan reads it: every later job
+    // scans the pinned copy (or the checkpoint), so the transform runs
+    // once per row, and the joins against it plan with its real size.
+    val incoming =
+      if (snapshotUnstable) MigrationExecutor.barrier(incoming0) else pin(incoming0.persist())
+    val migratedCount = incoming.count()
 
     // 4. orphans: existing dest keys with no surviving incoming row —
     //    exact `left_anti` parity with `Executor.php:368-382`. (Under
@@ -201,8 +215,8 @@ final class MigrationExecutor(
 
     // 5. merge: incoming wins over existing on key equality; kept orphans
     //    ride along under KeepOrphans, vanish under PruneOrphans. Built
-    //    from the materialized orphans so the merged plan (returned as
-    //    finalSnapshot) stays evaluable after the write.
+    //    from the materialized incoming and orphans, so the merged plan
+    //    (returned as finalSnapshot) stays evaluable after the write.
     val body = incoming.select(
       (destIdCols ++ transformedValueCols(incoming, spec)).map(col): _*)
     val merged = snapshot match {
@@ -223,12 +237,12 @@ final class MigrationExecutor(
     //    (JDBC truncate+overwrite), the merged plan MUST be fully
     //    materialized first through a reliable barrier — a cached plan
     //    whose partitions are evicted mid-write would recompute from the
-    //    already-truncated table.
-    val persistedMerged =
+    //    already-truncated table. On read-safe sinks `merged` is only a
+    //    plan over the two pinned frames: one cached copy of the rows.
+    val finalSnapshot =
       if (snapshot.nonEmpty && !dest.overwriteIsReadSafe) MigrationExecutor.barrier(merged)
-      else pin(merged.persist())
-    val migratedCount = body.count()
-    dest.write(persistedMerged, spec)
+      else merged
+    dest.write(finalSnapshot, spec)
 
     val mappingRows = incoming.select(
       spec.sourceIds.map(f => col(f.name).as(s"${MappingStore.SourcePrefix}${f.name}")) ++
@@ -243,7 +257,7 @@ final class MigrationExecutor(
     }
     MigrationResult(migratedCount, reported,
       if (orphanPolicy == IgnoreOrphans) 0L else orphanCount,
-      persistedMerged, incoming.select(destIdCols.map(col): _*))
+      finalSnapshot, incoming.select(destIdCols.map(col): _*))
   }
 
   /** Incremental (delta) execution — the O(batch) path for streaming /
@@ -260,6 +274,14 @@ final class MigrationExecutor(
     * history as `ctx.snapshot`, destination ids resolve through the
     * mapping table with dense generated ids extending the reconciled
     * max ([[assignGeneratedIds]]), and mappings are recorded per batch.
+    *
+    * Two halves, one code path: [[computeDelta]] reads, transforms and
+    * evaluates the delta once (pinned and counted) and writes nothing;
+    * its [[StagedDelta.commit]] then records the mapping and appends the
+    * data. `executeDelta` is the one followed by the other. A caller
+    * chaining stages may run a stage's commit while it computes the next
+    * stage, as long as the next stage reads nothing the commit writes
+    * ([[graft.streaming.StreamingCuration.runDagIncremental]]).
     *
     * Replay safety (exactly-once under foreachBatch retries): mappings
     * are recorded BEFORE the data append — the one ordering that makes
@@ -280,7 +302,19 @@ final class MigrationExecutor(
       spark: SparkSession,
       migration: Migration,
       source: SourceDriver,
-      dest: graft.drivers.DeltaDestination): MigrationResult = {
+      dest: graft.drivers.DeltaDestination): MigrationResult =
+    computeDelta(spark, migration, source, dest).commit()
+
+  /** [[executeDelta]]'s compute half: everything up to, and not
+    * including, the first durable write. `incoming` is pinned and
+    * counted before any plan reads it, so the transform runs once per
+    * row and the mapping and append plans scan the cached rows.
+    */
+  private[graft] def computeDelta(
+      spark: SparkSession,
+      migration: Migration,
+      source: SourceDriver,
+      dest: graft.drivers.DeltaDestination): StagedDelta = {
     val spec = migration.spec
     val destIdCols = spec.destinationIds.map(_.name)
     require(dest.snapshotIsStableAcrossWrites,
@@ -312,23 +346,23 @@ final class MigrationExecutor(
         assignGeneratedIdsFrom(mapper.lookupDest(transformed, spec), spec, maxExisting)
       }
     ).persist())
+    val written = incoming.count()
 
     val mappingRows = incoming.select(
       spec.sourceIds.map(f => col(f.name).as(s"${MappingStore.SourcePrefix}${f.name}")) ++
         spec.destinationIds.map(f => col(f.name).as(s"${MappingStore.DestPrefix}${f.name}")): _*)
-    mapper.record(spark, spec, mappingRows, MappingStore.StatusMigrated)
-
     // body is a narrow projection of the persisted `incoming` — a second
     // persist would only duplicate the cache
     val body = incoming.select(
       (destIdCols ++ transformedValueCols(incoming, spec)).map(col): _*)
-    val written = body.count()
-    if (snapshot.isEmpty) dest.write(body, spec) // first batch publishes the base generation
-    else if (written > 0) { dest.appendDelta(body, spec); () }
-
     val emptyOrphans = body.limit(0).select(destIdCols.map(col): _*)
-    MigrationResult(written, emptyOrphans, 0L, body,
+    val result = MigrationResult(written, emptyOrphans, 0L, body,
       incoming.select(destIdCols.map(col): _*))
+    new StagedDelta(result, () => {
+      mapper.record(spark, spec, mappingRows, MappingStore.StatusMigrated)
+      if (snapshot.isEmpty) dest.write(body, spec) // first batch publishes the base generation
+      else if (written > 0) { dest.appendDelta(body, spec); () }
+    })
   }
 
   /** Periodic orphan reconciliation for the incremental path — the

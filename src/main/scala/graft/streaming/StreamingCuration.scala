@@ -14,28 +14,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SAME `MigrationExecutor` the one-shot pipeline uses, with the SAME
   * persistent mapping tables upserting across batches.
   *
-  * Per micro-batch, inside `foreachBatch`:
+  * Per micro-batch, inside `foreachBatch` ([[runDagIncremental]], the
+  * default):
   *
   *   1. LAND — the batch is written to `landed/batch_<batchId>`
   *      (overwrite keyed by batchId: a crash-replayed batch rewrites its
   *      own directory, never doubles — the standard idempotent
   *      foreachBatch sink discipline). The landed set is the pipeline's
   *      bronze table: the cumulative corpus as of this batch.
-  *   2. DELTA-PROPAGATE ([[runDagIncremental]], the default) — ONLY the
-  *      batch's rows flow through the four per-document stages
-  *      (`MigrationExecutor.executeDelta`: mapping-assigned dense dids
+  *   2. COMPUTE each per-document stage in DAG order (ingest → dedup →
+  *      quality → langid) over the previous stage's delta only
+  *      (`MigrationExecutor.computeDelta`): mapping-assigned dense dids
   *      extend the historical id space, the incremental dedup variant
   *      anti-joins the batch against its historical fingerprint state,
-  *      quality and langid are per-row) and each stage lands its delta
-  *      as an O(batch) merge-on-read segment. Only the genuinely global
-  *      mix stage recomputes, over the langid state it already
-  *      maintains — one snapshot read, never the raw corpus. After the
-  *      final batch the destination state is BYTE-IDENTICAL to the
-  *      one-shot batch pipeline over the same corpus — the property the
-  *      `stream_llm_pipeline` gate hashes against `etl_llm_pipeline`'s
-  *      oracle, and StreamingSpec proves against a [[runDag]] twin.
-  *      Per-stage processed-row counts land in `metrics/batch_<id>` —
-  *      the recorded evidence that the non-global stages are O(batch).
+  *      quality and langid are per-row. Each stage's delta is evaluated
+  *      once and pinned; it is the next stage's input.
+  *   3. COMMIT each computed stage on the batch's single write lane —
+  *      its mapping record, then its delta append, an O(batch)
+  *      merge-on-read segment — while step 2 computes the next stage.
+  *   4. DRAIN the lane, then MIX: the genuinely global stage recomputes
+  *      over the langid state (read and pinned once per batch, never the
+  *      raw corpus) and publishes a generation (`execute`, under
+  *      [[PruneOrphans]]).
+  *   5. METRICS — per-stage processed-row counts land in
+  *      `metrics/batch_<id>`, the recorded evidence that the non-global
+  *      stages are O(batch).
+  *
+  * After the final batch the destination state is BYTE-IDENTICAL to the
+  * one-shot batch pipeline over the same corpus — the property the
+  * `stream_llm_pipeline` gate hashes against `etl_llm_pipeline`'s
+  * oracle, and StreamingSpec proves against a [[runDag]] twin.
   *
   * [[runDag]] — full re-derivation of the whole DAG over the cumulative
   * landed corpus — remains available as the one-shot twin (and for
@@ -44,14 +52,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Exactly-once: the file source's checkpoint replays a failed batch
   * with the same id and files; landing is idempotent by construction,
-  * and every stage write is an idempotent keyed upsert — executeDelta
-  * records mappings BEFORE appending data, so a replayed batch resolves
-  * the same dids, recomputes the same deltas, and the destination's
-  * latest-wins reconcile folds the duplicate segments away. A crash at
-  * ANY point — after landing, mid-DAG with some stages committed, or
-  * before the batch commit — therefore converges to the same final
-  * state on restart; StreamingSpec proves the mid-DAG case with an
-  * injected one-shot stage failure.
+  * and every stage write is an idempotent keyed upsert — each delta
+  * stage records its mappings BEFORE appending its data, so a replayed
+  * batch resolves the same dids, recomputes the same deltas, and the
+  * destination's latest-wins reconcile folds the duplicate segments
+  * away. The write lane changes when writes run, not which or in what
+  * order: the durable writes of a batch are still, in sequence, ingest
+  * mapping, ingest data, dedup mapping, dedup data, quality mapping,
+  * quality data, langid mapping, langid data, then mix data and mix
+  * mapping. Only the compute of stage k+1 overlaps the writes of stage
+  * k, which is safe because no per-document stage reads another stage's
+  * committed output; mix, the one that does, waits for the drain. The
+  * first failed commit skips every later one and fails the batch, and
+  * the batch does not return while a write is in flight. A crash at ANY
+  * point — after landing, mid-DAG with some stages committed, or before
+  * the batch commit — therefore leaves a prefix of that sequence and
+  * converges to the same final state on restart; StreamingSpec injects
+  * a crash before and after every stage's data write.
   *
   * Scale shape: landing + the four per-document stages cost O(batch) in
   * both compute and bytes written; dedup's history is scanned once per
@@ -95,10 +112,12 @@ object StreamingCuration {
     * path (default since r17; full re-derivation per batch made the
     * incremental cost O(corpus), the r16 verdict's one weak component).
     * The four per-document stages run through
-    * `MigrationExecutor.executeDelta` chained on each other's delta
-    * output (the chain IS the dependency order — no topo sort needed);
-    * mix recomputes over the cumulative langid state under
-    * [[PruneOrphans]] (its md5-ordered per-source cap can evict
+    * `MigrationExecutor.executeDelta`'s two halves, chained on each
+    * other's delta output (the chain IS the dependency order — no topo
+    * sort needed): this thread computes stage k+1 while stage k's commit
+    * runs on the batch's [[WriteLane]]. The lane is drained before mix
+    * recomputes over the cumulative langid state (pinned once per batch)
+    * under [[PruneOrphans]] (its md5-ordered per-source cap can evict
     * previously published rows as the corpus grows). Per-stage
     * (input_rows, output_rows) land in `metrics/batch_<batchId>`
     * (overwrite — replay-idempotent like everything else here).
@@ -116,52 +135,96 @@ object StreamingCuration {
       case other => sys.error(s"incremental curation needs a DeltaDestination " +
         s"for ${m.spec.name}, got ${other.getClass.getName}")
     }
+    def sourceOf(df: DataFrame): SourceDriver = new SourceDriver {
+      def read(s: SparkSession, sp: MigrationSpec): DataFrame = df
+    }
     val metrics = scala.collection.mutable.ListBuffer.empty[(Long, String, Long, Long)]
-    // opt-in per-stage wall attribution (graft.curation.logStages) — the
-    // r21 verdict's task 3: the gate's 20+ s was a single aggregate with
-    // nothing localizing WHICH stage costs what; probes read these
-    // stderr lines (BENCH_NOTES r22), production would emit them as
-    // metrics. Timing-only: no behavior depends on it.
-    val logStages = spark.conf.getOption("graft.curation.logStages").contains("true")
-    def timed[T](stage: String)(body: => T): T =
-      if (!logStages) body
-      else {
-        val t0 = System.nanoTime()
-        try body
-        finally System.err.println(f"[curation] batch=$batchId stage=$stage " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
     val landed = spark.read.parquet(s"$base/landed/batch_$batchId").persist()
+    var langidState: Option[DataFrame] = None
+    val lane = new WriteLane
     try {
       var delta: DataFrame = landed
       var deltaRows: Option[Long] = None // stage k's counted output = k+1's input
       migs.init.foreach { m =>
         val d = deltaDest(m)
         refs.register(m.spec, d)
-        val stageIn = delta
-        val inRows = deltaRows.getOrElse(stageIn.count())
-        val res = timed(m.spec.name)(executor.executeDelta(spark, m, new SourceDriver {
-          def read(s: SparkSession, sp: MigrationSpec): DataFrame = stageIn
-        }, d))
-        metrics += ((batchId, m.spec.name, inRows, res.migrated))
-        delta = res.finalSnapshot // the persisted stage delta, next stage's input
-        deltaRows = Some(res.migrated)
+        val inRows = deltaRows.getOrElse(delta.count())
+        val staged = executor.computeDelta(spark, m, sourceOf(delta), d)
+        lane.submit(staged.commit())
+        metrics += ((batchId, m.spec.name, inRows, staged.result.migrated))
+        delta = staged.result.finalSnapshot // the pinned stage delta, next stage's input
+        deltaRows = Some(staged.result.migrated)
       }
+      // mix is the one stage that reads another stage's committed output
+      lane.drain()
       val mix = migs.last
       val mixDest = destFor(mix)
       refs.register(mix.spec, mixDest)
       val langid = migs(3)
-      val langidState = deltaDest(langid).morSnapshot(spark, langid.spec)
-        .getOrElse(sys.error("incremental curation: no langid state for mix"))
-      val mixRes = timed(mix.spec.name)(executor.execute(spark, mix, new SourceDriver {
-        def read(s: SparkSession, sp: MigrationSpec): DataFrame = langidState
-      }, mixDest))
-      metrics += ((batchId, mix.spec.name, langidState.count(), mixRes.migrated))
+      val state = deltaDest(langid).morSnapshot(spark, langid.spec)
+        .getOrElse(sys.error("incremental curation: no langid state for mix")).persist()
+      langidState = Some(state)
+      val stateRows = state.count()
+      val mixRes = executor.execute(spark, mix, sourceOf(state), mixDest)
+      metrics += ((batchId, mix.spec.name, stateRows, mixRes.migrated))
       val sp = spark
       import sp.implicits._
       metrics.toSeq.toDF("batch_id", "stage", "input_rows", "output_rows")
         .coalesce(1).write.mode("overwrite").parquet(s"$base/metrics/batch_$batchId")
-    } finally { landed.unpersist(); executor.release(); refs.release() }
+    } finally {
+      lane.close()
+      langidState.foreach(_.unpersist())
+      landed.unpersist(); executor.release(); refs.release()
+    }
+  }
+
+  /** One batch's ordered write lane: commits run one at a time, in
+    * submission order, on a single thread, while the submitting thread
+    * goes on computing. The first failure skips every later commit;
+    * [[submit]] and [[drain]] rethrow it. The thread is created by the
+    * first [[submit]], so it inherits the submitting thread's session
+    * and job properties (the stream's job group among them).
+    */
+  private final class WriteLane {
+    private val pool = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+      val t = new Thread(r, "curation-write-lane")
+      t.setDaemon(true)
+      t
+    }
+    @volatile private var failure: Throwable = null
+    @volatile private var open = true
+
+    private def rethrow(): Unit = if (failure != null) throw failure
+
+    def submit(commit: => Unit): Unit = {
+      rethrow()
+      pool.execute(() =>
+        if (open && failure == null)
+          try commit catch { case t: Throwable => failure = t })
+    }
+
+    /** Wait for every submitted commit (the lane runs in order, so a
+      * no-op queued last completes after all of them); rethrow the
+      * first failure.
+      */
+    def drain(): Unit = {
+      pool.submit(new Runnable { def run(): Unit = () }).get()
+      rethrow()
+    }
+
+    /** Skip commits not yet started and wait, uninterruptibly, for the
+      * one in flight: the batch never returns while a write is running.
+      * Never throws — the batch's own outcome is already decided.
+      */
+    def close(): Unit = {
+      open = false
+      pool.shutdown()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
   }
 
   /** The recorded per-batch per-stage processed-row evidence, across all

@@ -282,4 +282,31 @@ class MigrateCliSpec extends SparkSpec {
     assert(results("named_fix").migrated == 25)
     assert(spark.read.parquet(s"$base/named_nation/gen0").count() == 25)
   }
+
+  test("a CLI run releases what it pinned: no persistent RDD outlives run()") {
+    val base = setProps()
+    // a region migration that resolves a reference into nation_fix
+    // (memoized by the reference store), run twice so the second run
+    // takes the update path with its orphan pass
+    val withRef = new Migration {
+      def spec: MigrationSpec = MigrationSpec("region_ref", source = s"$Sf/region.parquet",
+        sourceDriver = "parquet", destination = s"$base/region_ref",
+        destinationDriver = "parquet", sourceIds = Seq(IdField("r_regionkey", LongId)),
+        destinationIds = Seq(IdField("r_regionkey", LongId)), group = "fixtures",
+        depends = Seq("nation_fix"))
+      def transform(src: DataFrame, ctx: TransformContext): DataFrame =
+        ctx.references.resolve(src.withColumn("nk", col("r_regionkey")), "nation_fix",
+            Map("nk" -> "n_nationkey"), Seq("name_upper" -> "nation_name"))
+          .select(col("r_regionkey"), col("r_name"), col("nation_name"))
+    }
+    val loaded = Seq(new NationFixtureMigration, withRef)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    (1 to 2).foreach { run =>
+      val results = MigrateCli.run(spark, MigrateCli.Args(mappingDir = s"$base/map",
+        groups = Set("fixtures")), loaded = loaded)
+      assert(results("region_ref").migrated == 5)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"run $run left ${left.size} persistent RDDs pinned")
+    }
+  }
 }

@@ -31,6 +31,95 @@ class ExecutorSpec extends SparkSpec {
       src.select(col("src_id"), col("src_id").as("id"), upper(col("v")).as("v"))
   }
 
+  /** [[natural]], with a transform that counts its per-row evaluations. */
+  private def counted(sp: MigrationSpec, evals: org.apache.spark.util.LongAccumulator): Migration =
+    new Migration {
+      def spec: MigrationSpec = sp
+      def transform(src: DataFrame, ctx: TransformContext): DataFrame = {
+        val tick = udf { (v: String) => evals.add(1L); v.toUpperCase }
+        src.select(col("src_id"), col("src_id").as("id"), tick(col("v")).as("v"))
+      }
+    }
+
+  test("execute over an existing snapshot evaluates the transform once per incoming row") {
+    val (base, _, _, exec) = fixture()
+    val sp = mkSpec(base)
+    val dest = new ParquetDestinationDriver
+    val evals = spark.sparkContext.longAccumulator("execute_evals")
+    exec.execute(spark, counted(sp, evals), inlineSource(s => {
+      import s.implicits._
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("src_id", "v")
+    }), dest)
+    evals.reset()
+    // update run: one changed row, one kept, one new, one orphan
+    val r = exec.execute(spark, counted(sp, evals), inlineSource(s => {
+      import s.implicits._
+      Seq((1L, "a2"), (2L, "b"), (4L, "d")).toDF("src_id", "v")
+    }), dest)
+    assert(r.migrated == 3 && r.orphanCount == 1)
+    assert(evals.value == 3L, s"transform evaluated ${evals.value} times for 3 incoming rows")
+    assert(dest.snapshot(spark, sp).get.count() == 4, "orphan kept, new row inserted")
+    exec.release()
+  }
+
+  test("executeDelta evaluates the transform once per incoming row") {
+    val (base, mapper, _, exec) = fixture(IgnoreOrphans)
+    val sp = mkSpec(base)
+    val dest = new ParquetDestinationDriver
+    val evals = spark.sparkContext.longAccumulator("delta_evals")
+    Seq(Seq((1L, "a"), (2L, "b")), Seq((2L, "b2"), (3L, "c"), (4L, "d"))).foreach { rows =>
+      evals.reset()
+      val r = exec.executeDelta(spark, counted(sp, evals), inlineSource(s => {
+        import s.implicits._
+        rows.toDF("src_id", "v")
+      }), dest)
+      assert(r.migrated == rows.size)
+      assert(evals.value == rows.size.toLong,
+        s"transform evaluated ${evals.value} times for ${rows.size} incoming rows")
+    }
+    assert(dest.morSnapshot(spark, sp).get.count() == 4 && mapper.load(spark, sp).get.count() == 4)
+    exec.release()
+  }
+
+  test("incremental curation commits in DAG order, each stage's mapping before its data") {
+    val base = scratchDir("exec_lane")
+    val docs = spark.read.parquet(s"$Sf/documents.parquet")
+    val mapper = new MappingStore(s"$base/map")
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Boolean)]()
+    val inner = new ParquetDestinationDriver
+    // logs every data write (stage, call), with whether the stage's
+    // mapping already held every key being written when it was called
+    val logging = new DeltaDestination {
+      private def logged[T](call: String, df: DataFrame, sp: MigrationSpec)(write: => T): T = {
+        val mapped = mapper.load(spark, sp).exists(m =>
+          df.select(col("did")).except(m.select(col("dest_did"))).isEmpty)
+        log.add((sp.name, call, mapped))
+        write
+      }
+      def snapshot(s: SparkSession, sp: MigrationSpec) = inner.snapshot(s, sp)
+      def write(df: DataFrame, sp: MigrationSpec): Unit = logged("write", df, sp)(inner.write(df, sp))
+      def appendDelta(df: DataFrame, sp: MigrationSpec): Long =
+        logged("append", df, sp)(inner.appendDelta(df, sp))
+      def morSnapshot(s: SparkSession, sp: MigrationSpec) = inner.morSnapshot(s, sp)
+      override def overwriteIsReadSafe: Boolean = inner.overwriteIsReadSafe
+      override def snapshotIsStableAcrossWrites: Boolean = inner.snapshotIsStableAcrossWrites
+    }
+    val perDoc = CurationPipeline.StageNames.init
+    Seq(0L, 1L).foreach { b =>
+      docs.filter(col("doc_id") % 2 === b).write.parquet(s"$base/landed/batch_$b")
+      log.clear()
+      graft.streaming.StreamingCuration.runDagIncremental(spark, base, b, dests = _ => logging)
+      // batch 0 publishes every stage's base generation; batch 1 appends
+      val call = if (b == 0L) "write" else "append"
+      import scala.jdk.CollectionConverters._
+      val got = log.asScala.toSeq
+      assert(got.map(e => (e._1, e._2)) == perDoc.map(_ -> call) :+ ("llm_mix" -> "write"),
+        s"batch $b: data writes out of DAG order: $got")
+      assert(got.filter(e => perDoc.contains(e._1)).forall(_._3),
+        s"batch $b: a stage's data was written before its mapping: $got")
+    }
+  }
+
   test("re-running the same migration is idempotent (upsert, not duplicate)") {
     import spark.implicits._
     val (base, mapper, _, exec) = fixture()

@@ -210,24 +210,146 @@ class StreamingSpec extends SparkSpec {
       "per-stream conf must not leak into the parent session")
   }
 
-  test("streaming curation DAG: crash mid-DAG, restart from checkpoint — exactly-once final state") {
-    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
-    val base = scratchDir("stream_cur")
-    val ckpt = scratchDir("stream_cur_ckpt")
-    val docs = spark.read.parquet(s"$Sf/documents.parquet")
+  // ---- streaming curation: the durable-write transaction under crashes ----
 
-    // three doc_id-ordered chunks with ascending mtimes (the gate's
-    // arrival order — dids then coincide with the batch assignment)
-    val chunkDir = java.nio.file.Files.createTempDirectory("stream_cur_chunks")
-    val mm = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
+  private lazy val curationDocs = spark.read.parquet(s"$Sf/documents.parquet")
+
+  /** Three doc_id-ordered chunk files with ascending mtimes (the gate's
+    * arrival order: dids then coincide with the batch assignment).
+    */
+  private lazy val curationChunks: String = {
+    val dir = java.nio.file.Files.createTempDirectory("stream_cur_chunks")
+    val mm = curationDocs.agg(min(col("doc_id")), max(col("doc_id"))).head()
     val (lo, hi) = (mm.getLong(0), mm.getLong(1) + 1L)
     val step = math.max(1L, (hi - lo + 2) / 3)
     val mtimeBase = System.currentTimeMillis() - 60000L
     for (i <- 0 until 3) {
       graft.queries.Tables.writeChunkFile(
-        docs.filter(col("doc_id") >= lo + i * step && col("doc_id") < lo + (i + 1) * step),
-        chunkDir, f"chunk_$i%03d.parquet", mtimeBase + i * 10000L, required = true)
+        curationDocs.filter(col("doc_id") >= lo + i * step && col("doc_id") < lo + (i + 1) * step),
+        dir, f"chunk_$i%03d.parquet", mtimeBase + i * 10000L, required = true)
     }
+    dir.toString
+  }
+
+  /** Curate the three chunks, one file per trigger, until they run out. */
+  private def startCuration(base: String, ckpt: String,
+      dests: Migration => graft.drivers.DestinationDriver) =
+    StreamingCuration.start(
+      spark.readStream.schema(curationDocs.schema)
+        .option("maxFilesPerTrigger", "1").parquet(curationChunks),
+      base, ckpt, org.apache.spark.sql.streaming.Trigger.AvailableNow(), dests)
+
+  /** A stage destination that throws once, at its second data write
+    * (`write` or `appendDelta`): before forwarding it, or after it has
+    * landed. Batch 0 publishes each stage's base generation through
+    * `write`, so the second data write is batch 1's.
+    */
+  private final class CrashingDest(inner: ParquetDestinationDriver,
+      afterWrite: Boolean, message: String) extends graft.drivers.DeltaDestination {
+    private val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    private def crashing[T](write: => T): T = {
+      val trip = writes.incrementAndGet() == 2
+      if (trip && !afterWrite) throw new RuntimeException(message)
+      val out = write
+      if (trip) throw new RuntimeException(message)
+      out
+    }
+    def snapshot(s: org.apache.spark.sql.SparkSession, sp: MigrationSpec) = inner.snapshot(s, sp)
+    def write(df: DataFrame, sp: MigrationSpec): Unit = crashing(inner.write(df, sp))
+    def appendDelta(df: DataFrame, sp: MigrationSpec): Long = crashing(inner.appendDelta(df, sp))
+    def morSnapshot(s: org.apache.spark.sql.SparkSession, sp: MigrationSpec) =
+      inner.morSnapshot(s, sp)
+    override def overwriteIsReadSafe: Boolean = inner.overwriteIsReadSafe
+    override def snapshotIsStableAcrossWrites: Boolean = inner.snapshotIsStableAcrossWrites
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Nil else t +: causes(t.getCause)
+
+  /** Run the stream with `stage`'s destination crashing once; assert the
+    * crash failed the query, then restart from the same checkpoint.
+    */
+  private def crashAndRestart(base: String, ckpt: String, stage: String,
+      afterWrite: Boolean, message: String,
+      afterCrash: ParquetDestinationDriver => Unit = _ => ()): ParquetDestinationDriver = {
+    val dest = new ParquetDestinationDriver
+    val crashing = new CrashingDest(dest, afterWrite, message)
+    val dests: Migration => graft.drivers.DestinationDriver =
+      m => if (m.spec.name == stage) crashing else dest
+    val q1 = startCuration(base, ckpt, dests)
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q1.awaitTermination())
+    assert(causes(ex).exists(c => Option(c.getMessage).exists(_.contains(message))),
+      s"expected the injected crash, got: $ex")
+    // the crash hit batch 1: batch 2 never landed
+    val landed = new java.io.File(s"$base/landed").listFiles().map(_.getName).sorted.toSeq
+    assert(landed == Seq("batch_0", "batch_1"), s"crash was not on batch 1: landed $landed")
+    afterCrash(dest)
+    val q2 = startCuration(base, ckpt, dests)
+    try q2.awaitTermination() finally q2.stop()
+    dest
+  }
+
+  /** Every durable output of a curation run, as sorted row strings: the
+    * curated snapshot, each stage's reconciled state, and each stage's
+    * mapping `(source_*, dest_*, status)` (`updated` is a wall clock).
+    */
+  private def curationState(base: String): Seq[(String, Seq[String])] = {
+    val dest = new ParquetDestinationDriver
+    val mapper = new MappingStore(s"$base/map")
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    ("curated" -> rows(StreamingCuration.curated(spark, base).get)) +:
+      CurationPipeline.migrations(s"$base/stages").flatMap { m =>
+        Seq(s"${m.spec.name} state" -> rows(dest.morSnapshot(spark, m.spec).get),
+          s"${m.spec.name} mapping" ->
+            rows(mapper.load(spark, m.spec).get.drop(MappingStore.UpdatedCol)))
+      }
+  }
+
+  private lazy val crashFreeState: Seq[(String, Seq[String])] = {
+    val base = scratchDir("stream_cur_ref")
+    val q = startCuration(base, scratchDir("stream_cur_ref_ckpt"), null)
+    try q.awaitTermination() finally q.stop()
+    curationState(base)
+  }
+
+  // Crash-point enumeration: every stage, before and after its batch-1
+  // data write. For the four delta stages the mapping is already recorded
+  // before the data write; the mix stage (execute) records after it. A
+  // restart must converge to the crash-free run's every durable output.
+  for (stage <- CurationPipeline.StageNames; afterWrite <- Seq(false, true)) {
+    val point = if (afterWrite) "after" else "before"
+    test(s"streaming curation crash point: $stage, $point its batch-1 data write — restart equals a crash-free run") {
+      val base = scratchDir("stream_cur_cp")
+      crashAndRestart(base, scratchDir("stream_cur_cp_ckpt"), stage, afterWrite,
+        s"injected crash $point $stage data write")
+      val got = curationState(base)
+      assert(got.map(_._1) == crashFreeState.map(_._1))
+      got.zip(crashFreeState).foreach { case ((name, rows), (_, want)) =>
+        assert(rows == want, s"$name differs from the crash-free run: " +
+          s"${rows.diff(want).take(3)} extra, ${want.diff(rows).take(3)} missing")
+      }
+    }
+  }
+
+  test("streaming curation: a batch leaves no pinned RDD behind") {
+    val base = scratchDir("stream_cur_pins")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // batch 0 publishes base generations, batch 1 appends deltas and
+    // prunes the mix stage: the landed batch, the stage pins and the
+    // langid state must all be released by the end of each
+    Seq(0L, 1L).foreach { b =>
+      curationDocs.filter(col("doc_id") % 2 === b).write.parquet(s"$base/landed/batch_$b")
+      StreamingCuration.runDagIncremental(spark, base, b)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"batch $b left ${left.size} persistent RDDs pinned")
+    }
+  }
+
+  test("streaming curation DAG: crash mid-DAG, restart from checkpoint — exactly-once final state") {
+    val base = scratchDir("stream_cur")
+    val ckpt = scratchDir("stream_cur_ckpt")
+    val docs = curationDocs
 
     // one-shot twin: the whole corpus as a single landed batch defines
     // the state the crashed-and-recovered stream must converge to
@@ -236,60 +358,24 @@ class StreamingSpec extends SparkSpec {
     StreamingCuration.runDag(spark, twinBase)
     val expected = StreamingCuration.curated(spark, twinBase).get
 
-    // poisoned quality destination: the SECOND-ever quality commit —
-    // batch 0 publishes the base generation via write(), so batch 1's
-    // delta append is commit #2, with ingest+dedup deltas already
-    // committed for that batch — throws once: a genuine mid-DAG crash.
-    // The replay passes through.
-    val qualityWrites = new java.util.concurrent.atomic.AtomicInteger(0)
-    val dest = new ParquetDestinationDriver
-    val dests: Migration => graft.drivers.DestinationDriver = m =>
-      if (m.spec.name != "llm_quality") dest
-      else new graft.drivers.DeltaDestination {
-        private def trip(): Unit =
-          if (qualityWrites.incrementAndGet() == 2)
-            throw new RuntimeException("injected mid-DAG crash")
-        def snapshot(s: org.apache.spark.sql.SparkSession, sp: MigrationSpec) =
-          dest.snapshot(s, sp)
-        def write(df: DataFrame, sp: MigrationSpec): Unit = {
-          trip(); dest.write(df, sp)
-        }
-        def appendDelta(df: DataFrame, sp: MigrationSpec): Long = {
-          trip(); dest.appendDelta(df, sp)
-        }
-        def morSnapshot(s: org.apache.spark.sql.SparkSession, sp: MigrationSpec) =
-          dest.morSnapshot(s, sp)
-        override def overwriteIsReadSafe: Boolean = dest.overwriteIsReadSafe
-        override def snapshotIsStableAcrossWrites: Boolean = dest.snapshotIsStableAcrossWrites
-      }
-    val schema = docs.schema
-    def startStream() = StreamingCuration.start(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(chunkDir.toString),
-      base, ckpt, Trigger.AvailableNow(), dests)
-
-    val q1 = startStream()
-    val ex = intercept[StreamingQueryException](q1.awaitTermination())
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(ex).exists(c =>
-        Option(c.getMessage).exists(_.contains("injected mid-DAG crash"))),
-      s"expected the injected crash, got: $ex")
-    // the crash landed MID-DAG: batch 1's ingest delta is committed
-    // (base generation + ≥1 merge-on-read segment) while quality is
-    // still at its batch-0 base generation with an empty delta log
+    // poisoned quality destination: batch 1's delta append (quality's
+    // second data write) throws once, with ingest+dedup deltas already
+    // committed for that batch — a genuine mid-DAG crash. The restart
+    // from the same checkpoint replays batch 1 with the same id and
+    // files: landing is idempotent, the DAG re-merges.
     val stages = graft.exec.CurationPipeline.migrations(s"$base/stages")
     def stageSpec(name: String) = stages.find(_.spec.name == name).get.spec
-    def deltas(name: String): Int = dest.deltaSegments(spark, stageSpec(name)).size
-    assert(deltas("llm_ingest") >= 1 && deltas("llm_quality") == 0 &&
-        dest.generations(spark, stageSpec("llm_quality")).size == 1,
-      s"crash was not mid-DAG: ingest deltas=${deltas("llm_ingest")} " +
-        s"quality deltas=${deltas("llm_quality")}")
-
-    // restart from the same checkpoint: batch 1 replays with the same
-    // id and files — landing is idempotent, the DAG re-merges
-    val q2 = startStream()
-    try q2.awaitTermination() finally q2.stop()
+    val dest = crashAndRestart(base, ckpt, "llm_quality", afterWrite = false,
+      "injected mid-DAG crash", afterCrash = { dest =>
+        // the crash landed MID-DAG: batch 1's ingest delta is committed
+        // (base generation + ≥1 merge-on-read segment) while quality is
+        // still at its batch-0 base generation with an empty delta log
+        def deltas(name: String): Int = dest.deltaSegments(spark, stageSpec(name)).size
+        assert(deltas("llm_ingest") >= 1 && deltas("llm_quality") == 0 &&
+            dest.generations(spark, stageSpec("llm_quality")).size == 1,
+          s"crash was not mid-DAG: ingest deltas=${deltas("llm_ingest")} " +
+            s"quality deltas=${deltas("llm_quality")}")
+      })
 
     val got = StreamingCuration.curated(spark, base).get
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
