@@ -194,20 +194,10 @@ final class ParquetDestinationDriver(
   override def snapshotIsStableAcrossWrites: Boolean = true // old gens survive
 
   private val TombstoneCol = ParquetDestinationDriver.TombstoneCol
+  private val DeltaPrefix = ParquetDestinationDriver.DeltaPrefix
 
-  private def currentFile(spark: SparkSession, base: String) =
-    new org.apache.hadoop.fs.Path(base, "_CURRENT")
-
-  private def currentGen(spark: SparkSession, base: String): Option[String] = {
-    val f = currentFile(spark, base)
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-      finally in.close()
-    }
-  }
+  private def currentGen(spark: SparkSession, base: String): Option[String] =
+    GenerationPointer.read(spark, base)
 
   private def catalogName(base: String, gen: String): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
@@ -225,11 +215,11 @@ final class ParquetDestinationDriver(
     current.map { g =>
       val dir = s"$base/$g"
       buckets match {
-        case None => spark.read.parquet(dir)
+        case None => ParquetDirs.read(spark, dir)
         case Some(n) =>
           val table = catalogName(base, g)
           if (!spark.catalog.tableExists(table)) {
-            val schema = spark.read.parquet(dir).schema.toDDL
+            val schema = ParquetDirs.schema(spark, dir).toDDL
             val keys = spec.destinationIds.map(_.name).mkString(", ")
             spark.sql(
               s"""CREATE TABLE $table ($schema) USING parquet
@@ -252,7 +242,7 @@ final class ParquetDestinationDriver(
     val base = UriSchemes.path(spec.destination)
     val dir = new org.apache.hadoop.fs.Path(base, s"gen$gen")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) Some(spark.read.parquet(dir.toString)) else None
+    if (fs.exists(dir)) Some(ParquetDirs.read(spark, dir.toString)) else None
   }
 
   /** The PUBLISHED generation number (what `_CURRENT` points at), if
@@ -390,11 +380,10 @@ final class ParquetDestinationDriver(
       throw new IllegalArgumentException(s"no such branch: $name"))
     val basePath = UriSchemes.path(spec.destination)
     SchemaEvolution.validateEvolution(
-      spark.read.parquet(s"$basePath/gen$head").schema, df.schema,
+      ParquetDirs.schema(spark, s"$basePath/gen$head"), df.schema,
       s"destination ${spec.name} ($basePath, branch $name head gen$head)")
     val next = generations(spark, spec).lastOption.getOrElse(-1L) + 1
-    writePartitions.fold(df)(df.coalesce)
-      .write.mode(SaveMode.Overwrite).parquet(s"$basePath/gen$next")
+    ParquetDirs.write(writePartitions.fold(df)(df.coalesce), s"$basePath/gen$next", SaveMode.Overwrite)
     writeBranchFile(spark, spec, name, head = next, base = branchBase)
   }
 
@@ -570,7 +559,7 @@ final class ParquetDestinationDriver(
     val base = UriSchemes.path(spec.destination)
     val gen = currentGen(spark, base).getOrElse(throw new IllegalStateException(
       s"merge-on-read delta needs a published base generation at $base"))
-    val cur = spark.read.parquet(s"$base/$gen").schema
+    val cur = ParquetDirs.schema(spark, s"$base/$gen")
     require(!cur.fieldNames.contains(TombstoneCol),
       s"published schema at $base carries a data column named $TombstoneCol — " +
         "reserved for tombstone delta segments; rename it")
@@ -583,15 +572,12 @@ final class ParquetDestinationDriver(
       throw new NonUniqueKeyException(
         s"MOR delta for ${spec.name} carries a duplicate destination key")
     val conformed = df.select(cur.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
-    val k = deltaIndexes(spark, base, gen).lastOption.getOrElse(-1L) + 1
-    // ErrorIfExists, not Overwrite: the delta index comes from a
-    // non-atomic directory listing, so two concurrent appenders can
-    // compute the same k — Overwrite would let one delta silently
-    // clobber the other (a lost upsert segment). Failing loudly turns
-    // the collision into a visible retry, the same stance the WAP paths
-    // take on generation numbers.
-    conformed.write.mode(SaveMode.ErrorIfExists).parquet(s"$base/mordelta_${gen}_$k")
-    k
+    // the index comes from a non-atomic directory listing, so two
+    // concurrent appenders can compute the same k: SegmentLog appends
+    // with ErrorIfExists, never Overwrite, so the collision is a visible
+    // retry instead of one delta silently clobbering the other — the
+    // same stance the WAP paths take on generation numbers
+    SegmentLog.append(conformed, base, DeltaPrefix, gen)
   }
 
   /** Incremental DELETE: land a TOMBSTONE delta segment carrying only
@@ -613,7 +599,7 @@ final class ParquetDestinationDriver(
     val gen = currentGen(spark, base).getOrElse(throw new IllegalStateException(
       s"tombstones need a published base generation at $base"))
     val keyFields = spec.destinationIds
-    require(!spark.read.parquet(s"$base/$gen").schema.fieldNames.contains(TombstoneCol),
+    require(!ParquetDirs.schema(spark, s"$base/$gen").fieldNames.contains(TombstoneCol),
       s"published schema at $base carries a data column named $TombstoneCol — " +
         "reserved for tombstone delta segments; rename it")
     require(keyFields.forall(f => keys.columns.contains(f.name)),
@@ -622,11 +608,7 @@ final class ParquetDestinationDriver(
       .select(keyFields.map(f => col(f.name).cast(f.idType.sparkType)): _*)
       .distinct()
       .withColumn(TombstoneCol, lit(true))
-    val k = deltaIndexes(spark, base, gen).lastOption.getOrElse(-1L) + 1
-    // same collision stance as appendDelta: ErrorIfExists turns a
-    // concurrent-appender index race into a visible retry
-    conformed.write.mode(SaveMode.ErrorIfExists).parquet(s"$base/mordelta_${gen}_$k")
-    k
+    SegmentLog.append(conformed, base, DeltaPrefix, gen) // appendDelta's collision stance
   }
 
   /** The current generation's delta-log segment indexes — observability
@@ -636,16 +618,8 @@ final class ParquetDestinationDriver(
     */
   def deltaSegments(spark: SparkSession, spec: MigrationSpec): Seq[Long] = {
     val base = UriSchemes.path(spec.destination)
-    currentGen(spark, base).map(g => deltaIndexes(spark, base, g)).getOrElse(Seq.empty)
-  }
-
-  private def deltaIndexes(spark: SparkSession, base: String, gen: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.matches(s"mordelta_${gen}_\\d+"))
-      .map(_.stripPrefix(s"mordelta_${gen}_").toLong).sorted
+    currentGen(spark, base).map(g => SegmentLog.committed(spark, base, DeltaPrefix, g))
+      .getOrElse(Seq.empty)
   }
 
   /** The reconciled merge-on-read view: published generation ⊎ its
@@ -662,14 +636,11 @@ final class ParquetDestinationDriver(
     require(buckets.isEmpty, "merge-on-read is for non-bucketed generation sinks")
     val base = UriSchemes.path(spec.destination)
     currentGen(spark, base).map { gen =>
-      val baseDf = spark.read.parquet(s"$base/$gen")
-      val ks = deltaIndexes(spark, base, gen)
+      val baseDf = ParquetDirs.read(spark, s"$base/$gen")
+      val ks = SegmentLog.committed(spark, base, DeltaPrefix, gen)
       if (ks.isEmpty) baseDf
       else {
-        val keyCols = spec.destinationIds.map(f => col(f.name))
         val keyNames = spec.destinationIds.map(_.name)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keyCols: _*).orderBy(col("_seq").desc)
         // A segment is either an upsert delta (full row schema) or a
         // TOMBSTONE segment ([[appendTombstones]]: key columns + a
         // `_tombstone` marker, value columns synthesized as NULL here —
@@ -677,21 +648,17 @@ final class ParquetDestinationDriver(
         // Latest-wins first, THEN the tombstone filter, so an upsert
         // re-arriving after a delete resurrects the key and a delete
         // after an upsert removes it — segment order is the truth.
-        val logLatest = ks
-          .map { k =>
-            val seg = spark.read.parquet(s"$base/mordelta_${gen}_$k")
-            val full = baseDf.schema.fields.foldLeft(
-              if (seg.columns.contains(TombstoneCol)) seg
-              else seg.withColumn(TombstoneCol, lit(false))) { (df, f) =>
-              if (df.columns.contains(f.name)) df
-              else df.withColumn(f.name, lit(null).cast(f.dataType))
-            }
-            full.select(baseDf.schema.fieldNames.map(col).toSeq :+ col(TombstoneCol): _*)
-              .withColumn("_seq", lit(k + 1))
+        val segments = ks.map { k =>
+          val seg = SegmentLog.read(spark, base, DeltaPrefix, gen, k)
+          val full = baseDf.schema.fields.foldLeft(
+            if (seg.columns.contains(TombstoneCol)) seg
+            else seg.withColumn(TombstoneCol, lit(false))) { (df, f) =>
+            if (df.columns.contains(f.name)) df
+            else df.withColumn(f.name, lit(null).cast(f.dataType))
           }
-          .reduce(_ unionByName _)
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_seq", "_rn")
+          full.select(baseDf.schema.fieldNames.map(col).toSeq :+ col(TombstoneCol): _*)
+        }
+        val logLatest = SegmentLog.latestPerKey(segments, keyNames.map(col))
         baseDf.join(logLatest.select(keyNames.map(col): _*), keyNames, "left_anti")
           .unionByName(logLatest.filter(!col(TombstoneCol)).drop(TombstoneCol)
             .select(baseDf.schema.fieldNames.map(col).toSeq: _*))
@@ -719,12 +686,11 @@ final class ParquetDestinationDriver(
     // never publish must fail at stage time, not after the audit
     currentGen(spark, base).foreach { g =>
       SchemaEvolution.validateEvolution(
-        spark.read.parquet(s"$base/$g").schema, df.schema,
+        ParquetDirs.schema(spark, s"$base/$g"), df.schema,
         s"destination ${spec.name} ($base, published $g, staging)")
     }
     val next = s"gen${generations(spark, spec).lastOption.getOrElse(-1L) + 1}"
-    writePartitions.fold(df)(df.coalesce)
-      .write.mode(SaveMode.Overwrite).parquet(s"$base/$next")
+    ParquetDirs.write(writePartitions.fold(df)(df.coalesce), s"$base/$next", SaveMode.Overwrite)
     next
   }
 
@@ -761,12 +727,8 @@ final class ParquetDestinationDriver(
     setCurrent(spark, UriSchemes.path(spec.destination), s"gen$gen")
   }
 
-  private def setCurrent(spark: SparkSession, base: String, gen: String): Unit = {
-    val f = currentFile(spark, base)
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(f, true)
-    try out.write(gen.getBytes("UTF-8")) finally out.close()
-  }
+  private def setCurrent(spark: SparkSession, base: String, gen: String): Unit =
+    GenerationPointer.publish(spark, base, gen)
 
   /** SHALLOW CLONE: publish a new destination whose gen0 references the
     * source's CURRENT generation files without rewriting a byte — the
@@ -841,7 +803,7 @@ final class ParquetDestinationDriver(
     */
   def currentSchema(spark: SparkSession, spec: MigrationSpec): Option[org.apache.spark.sql.types.StructType] = {
     val base = UriSchemes.path(spec.destination)
-    currentGen(spark, base).map(g => spark.read.parquet(s"$base/$g").schema)
+    currentGen(spark, base).map(g => ParquetDirs.schema(spark, s"$base/$g"))
   }
 
   /** Time travel ACROSS a schema boundary: read generation `gen` and
@@ -888,7 +850,7 @@ final class ParquetDestinationDriver(
     val base = UriSchemes.path(spec.destination)
     currentGen(spark, base).foreach { g =>
       SchemaEvolution.validateEvolution(
-        spark.read.parquet(s"$base/$g").schema, df.schema,
+        ParquetDirs.schema(spark, s"$base/$g"), df.schema,
         s"destination ${spec.name} ($base, published $g, partitioned)")
     }
     val next = s"gen${generations(spark, spec).lastOption.getOrElse(-1L) + 1}"
@@ -941,7 +903,7 @@ final class ParquetDestinationDriver(
     // new truth). The destination-side mirror of MappingStore.conform.
     prev.foreach { g =>
       SchemaEvolution.validateEvolution(
-        spark.read.parquet(s"$base/$g").schema, df.schema,
+        ParquetDirs.schema(spark, s"$base/$g"), df.schema,
         s"destination ${spec.name} ($base, published $g)")
     }
     // Next generation comes from the DIRECTORY LISTING (max gen dir + 1),
@@ -953,8 +915,7 @@ final class ParquetDestinationDriver(
     val next = s"gen${generations(spark, spec).lastOption.getOrElse(-1L) + 1}"
     buckets match {
       case None =>
-        writePartitions.fold(df)(df.coalesce)
-          .write.mode(SaveMode.Overwrite).parquet(s"$base/$next")
+        ParquetDirs.write(writePartitions.fold(df)(df.coalesce), s"$base/$next", SaveMode.Overwrite)
       case Some(n) =>
         val keys = spec.destinationIds.map(_.name)
         df.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*)
@@ -979,8 +940,8 @@ final class ParquetDestinationDriver(
     *
     *   1. CLAIM — the generation number comes from the listing as usual,
     *      but is made EXCLUSIVE by atomically creating `_claim_gen<n>`
-    *      with overwrite=false (create-no-overwrite is the filesystem's
-    *      CAS primitive); a rival that computed the same n fails the
+    *      only if absent ([[ExclusiveCreate]], the filesystem's CAS
+    *      primitive); a rival that computed the same n fails the
     *      create and takes n+1 — two stagers can never share a
     *      directory, which SaveMode.Overwrite staging would otherwise
     *      allow silently.
@@ -1007,30 +968,24 @@ final class ParquetDestinationDriver(
     val expected = Option(observedBase.get(base)).getOrElse(None)
     expected.foreach { g =>
       SchemaEvolution.validateEvolution(
-        spark.read.parquet(s"$base/gen$g").schema, df.schema,
+        ParquetDirs.schema(spark, s"$base/gen$g"), df.schema,
         s"destination ${spec.name} ($base, published gen$g, optimistic)")
     }
     val basePath = new org.apache.hadoop.fs.Path(base)
     val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(basePath)
-    // The claim loop runs under the per-base JVM lock: create-no-
-    // overwrite is atomic-exclusive on HDFS-like stores (the cross-
-    // process guarantee) but check-then-act on the LOCAL filesystem, so
-    // two in-process threads could otherwise both "create" the same
-    // marker and stage into one directory. Only the O(1) number claim
-    // is locked — the data write below runs unlocked.
+    // The claim loop also runs under the per-base JVM lock, which keeps
+    // in-process threads apart on stores whose create-no-overwrite is
+    // not exclusive. Only the O(1) number claim is locked — the data
+    // write below runs unlocked.
     var n = 0L
     ParquetDestinationDriver.lockFor(base).synchronized {
       n = generations(spark, spec).lastOption.getOrElse(-1L) + 1
-      var claimed = false
-      while (!claimed) {
-        try { fs.create(new org.apache.hadoop.fs.Path(base, s"_claim_gen$n"), false).close(); claimed = true }
-        catch { case _: java.io.IOException => n += 1 }
-      }
+      while (!ExclusiveCreate(fs, new org.apache.hadoop.fs.Path(base, s"_claim_gen$n"), Array.emptyByteArray))
+        n += 1
     }
     val next = s"gen$n"
-    writePartitions.fold(df)(df.coalesce)
-      .write.mode(SaveMode.Overwrite).parquet(s"$base/$next")
+    ParquetDirs.write(writePartitions.fold(df)(df.coalesce), s"$base/$next", SaveMode.Overwrite)
     def baseName(g: Option[Long]) = g.map(v => s"gen$v").getOrElse("none")
     val casMarker = new org.apache.hadoop.fs.Path(base, s"_cas_from_${baseName(expected)}")
     ParquetDestinationDriver.lockFor(base).synchronized {
@@ -1045,11 +1000,7 @@ final class ParquetDestinationDriver(
           setCurrent(spark, base, tgt)
         cur = currentGen(spark, base).map(_.stripPrefix("gen").toLong)
       }
-      val won = cur == expected && (try {
-        val out = fs.create(casMarker, false)
-        try out.write(next.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false })
+      val won = cur == expected && ExclusiveCreate(fs, casMarker, next.getBytes("UTF-8"))
       if (!won) {
         fs.delete(new org.apache.hadoop.fs.Path(base, next), true)
         fs.delete(new org.apache.hadoop.fs.Path(base, s"_claim_gen$n"), false)
@@ -1073,6 +1024,9 @@ object ParquetDestinationDriver {
 
   /** Marker column of a tombstone delta segment ([[ParquetDestinationDriver.appendTombstones]]). */
   val TombstoneCol = "_tombstone"
+
+  /** Directory prefix of the merge-on-read delta log ([[SegmentLog]]). */
+  private val DeltaPrefix = "mordelta"
 }
 
 /** CSV sink: header row, atomic commit — parity with
@@ -1406,6 +1360,11 @@ object SchemaEvolution {
       StructType(s.fields.map(f => f.copy(dataType = normalized(f.dataType), nullable = true)))
     case other => other
   }
+
+  /** `s` with every field, element and value nullable — the schema
+    * Spark's parquet writer stores for a frame of schema `s`.
+    */
+  private[graft] def nullable(s: StructType): StructType = normalized(s).asInstanceOf[StructType]
 
   /** Throws [[graft.spec.SchemaEvolutionException]] when `incoming`
     * changes a shared column in a non-widening direction.

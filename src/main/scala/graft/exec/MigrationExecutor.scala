@@ -289,8 +289,9 @@ final class MigrationExecutor(
     * ids through the mapping (never re-generating past rows it already
     * wrote), recomputes the same delta, and re-appends it; the
     * destination's latest-wins-per-key reconcile folds the duplicate
-    * segment away. (`record` itself is an atomic generation-pointer
-    * upsert, so a crash mid-record leaves the old table.) The reverse
+    * segment away. (`record` lands as one committed mapping-log
+    * segment, or as a new generation behind a pointer flip, so a crash
+    * mid-record leaves the old table.) The reverse
     * order would re-generate FRESH ids on replay — the same doc alive
     * under two keys.
     *

@@ -1,5 +1,6 @@
 package graft.mapper
 
+import graft.drivers.{GenerationPointer, ParquetDirs, SegmentLog}
 import graft.spec.MigrationSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
@@ -17,6 +18,14 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   * trips. Tables are Parquet generations keyed by migration name
   * ("extends" shares the parent's table via `MigrationSpec.mappingKey`),
   * optionally hash-bucketed on the source ids (`buckets`).
+  *
+  * Once a non-bucketed table has a published generation, `record`
+  * appends its stamped rows as one log segment `mlog_<gen>_<k>` instead
+  * of rewriting the table — O(batch), like the reference's per-row
+  * insert-or-update; reads apply the replace-by-key rule over
+  * generation ⊎ log. A record that finds [[MappingStore.LogCompactAt]]
+  * segments, or whose rows change the table's columns (a spec
+  * widening), folds the log and its own rows into the next generation.
   */
 /** @param keepGenerations when set, every write vacuums all but the
   *   newest N generation directories. Off by default: a vacuum is only
@@ -40,16 +49,8 @@ final class MappingStore(
 
   def tablePath(spec: MigrationSpec): String = s"$basePath/${spec.mappingKey}"
 
-  private def currentGen(spark: SparkSession, spec: MigrationSpec): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(tablePath(spec), "_CURRENT")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      Some(try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-      finally in.close())
-    }
-  }
+  private def currentGen(spark: SparkSession, spec: MigrationSpec): Option[String] =
+    GenerationPointer.read(spark, tablePath(spec))
 
   /** Stable catalog identifier for one generation of one mapping table
     * (bucket metadata lives in the session catalog; the path keeps the
@@ -64,24 +65,24 @@ final class MappingStore(
   def load(spark: SparkSession, spec: MigrationSpec): Option[DataFrame] =
     loadRaw(spark, spec).map(raw => conform(spec, raw))
 
-  /** Current generation WITHOUT conform — record() needs the raw schema
-    * to know which id columns conform is about to widen in.
+  /** Current generation (⊎ its log) WITHOUT conform — record() needs the
+    * raw schema to know which id columns conform is about to widen in.
     */
   private def loadRaw(spark: SparkSession, spec: MigrationSpec): Option[DataFrame] =
     currentGen(spark, spec).map { gen =>
       val dir = s"${tablePath(spec)}/$gen"
       buckets match {
-        case None => spark.read.parquet(dir)
+        case None => withLog(spark, spec, gen, ParquetDirs.read(spark, dir))
         case Some(n) =>
           val table = catalogName(spec, gen)
-          val parquetSchema = spark.read.parquet(dir).schema
+          val parquetSchema = ParquetDirs.schema(spark, dir)
           val keyNames = spec.sourceIds.map(f => s"$SourcePrefix${f.name}")
           if (keyNames.exists(k => !parquetSchema.fieldNames.contains(k))) {
             // generation predates a spec widening: its bucket layout hashes
             // the OLD key set and the new key column isn't even in the data
             // files, so CLUSTERED BY the spec keys would both lie and fail.
             // Read plain; the next writeGen re-buckets on the full keys.
-            spark.read.parquet(dir)
+            ParquetDirs.read(spark, dir)
           } else {
             if (!spark.catalog.tableExists(table)) {
               // re-attach bucket metadata to an existing generation (e.g.
@@ -117,10 +118,22 @@ final class MappingStore(
     *    untouched, like the reference (conform only ever adds).
     */
   private def conform(spec: MigrationSpec, existing: DataFrame): DataFrame = {
+    val want = checkIdTypes(spec, existing.schema)
+    val have = existing.columns.toSet
+    want.foldLeft(existing) { case (df, (name, t)) =>
+      if (have.contains(name)) df else df.withColumn(name, lit(null).cast(t))
+    }
+  }
+
+  /** The spec's id columns with their types, after checking that none
+    * present in `stored` has a different type (conform's refusal).
+    */
+  private def checkIdTypes(spec: MigrationSpec,
+      stored: org.apache.spark.sql.types.StructType): Seq[(String, org.apache.spark.sql.types.DataType)] = {
     val want: Seq[(String, org.apache.spark.sql.types.DataType)] =
       spec.sourceIds.map(f => (s"$SourcePrefix${f.name}", f.idType.sparkType)) ++
         spec.destinationIds.map(f => (s"$DestPrefix${f.name}", f.idType.sparkType))
-    val have = existing.schema.map(f => f.name -> f.dataType).toMap
+    val have = stored.map(f => f.name -> f.dataType).toMap
     want.foreach { case (name, t) =>
       have.get(name).filter(_ != t).foreach { stored =>
         throw new MappingSchemaMismatchException(
@@ -130,9 +143,64 @@ final class MappingStore(
             "mapping table explicitly (or restore the old id type)")
       }
     }
-    want.foldLeft(existing) { case (df, (name, t)) =>
-      if (have.contains(name)) df else df.withColumn(name, lit(null).cast(t))
-    }
+    want
+  }
+
+  /** Generation `gen` with its committed log segments applied, oldest
+    * first, each under the replace-by-key rule of [[record]] — exactly
+    * the records a full rewrite would have merged, merged at read time.
+    * A record folds the log as soon as it holds a segment
+    * ([[MappingStore.LogCompactAt]]), so a reader sees at most one
+    * unless records of two processes interleave. A segment is only
+    * appended when its columns equal the generation's, so no column is
+    * widened here.
+    */
+  private def withLog(spark: SparkSession, spec: MigrationSpec, gen: String,
+      base: DataFrame): DataFrame = {
+    val src = base.columns.filter(_.startsWith(SourcePrefix)).toSeq
+    val dst = base.columns.filter(_.startsWith(DestPrefix)).toSeq
+    SegmentLog.committed(spark, tablePath(spec), LogPrefix, gen)
+      .map(k => SegmentLog.read(spark, tablePath(spec), LogPrefix, gen, k))
+      .foldLeft(base)((acc, seg) => replaceByKey(acc, seg, src, dst, widened = Set.empty))
+  }
+
+  private def anyNonNull(cols: Seq[String]): Column =
+    cols.map(c => col(c).isNotNull).reduce(_ || _)
+
+  /** `existing` with every row that `incoming` replaces removed, plus
+    * `incoming` — the one replace-by-key rule of the table.
+    *
+    * Replace-by-key must distinguish the two row classes the table
+    * holds: keyed mappings (replaced when the same source tuple
+    * re-arrives) and orphan bookkeeping rows (ALL-null source ids — the
+    * recordOrphansKept invariant, `DataMigrationExecutor.php:320-326`)
+    * which all share the "key" NULL — a null-safe anti-join on source
+    * ids alone would let ONE incoming orphan row wipe EVERY previously
+    * kept orphan. Orphan rows are identified by their destination ids
+    * instead. "Keyed" means AT LEAST ONE non-null source id, NOT all
+    * non-null: a row recorded before a spec widening has NULL in the
+    * added column but is still a keyed mapping, not orphan bookkeeping.
+    * The anti-joins are plain equality (bucket-layout-served, no
+    * exchange) except on the `widened` columns, where a stored NULL acts
+    * as a wildcard.
+    */
+  private def replaceByKey(existing: DataFrame, incoming: DataFrame,
+      src: Seq[String], dst: Seq[String], widened: Set[String]): DataFrame = {
+    val srcKeyed = anyNonNull(src)
+    val existKeyed = existing.filter(srcKeyed)
+    val existOrphan = existing.filter(!srcKeyed)
+    val newKeyed = incoming.filter(srcKeyed)
+    val newOrphan = incoming.filter(!srcKeyed)
+    val keepKeyed = existKeyed.join(newKeyed,
+      src.map { c =>
+        val eq = existKeyed(c) === newKeyed(c)
+        if (widened.contains(c)) eq || existKeyed(c).isNull else eq
+      }.reduce(_ && _),
+      "left_anti")
+    val keepOrphan = existOrphan.join(newOrphan,
+      dst.map(c => existOrphan(c) === newOrphan(c)).reduce(_ && _),
+      "left_anti")
+    keepKeyed.unionByName(keepOrphan).unionByName(incoming)
   }
 
   /** Left-join `df` (carrying the source id columns) against the mapping
@@ -194,66 +262,52 @@ final class MappingStore(
           .drop(spec.destinationIds.map(f => s"$DestPrefix${f.name}"): _*)
     }
 
-  /** Insert-or-update a batch of mappings in one merge: rows in `incoming`
-    * replace existing rows with the same source-id tuple (null-safely),
-    * everything else is preserved; `updated` is stamped and `status` set —
-    * set-wise parity with `addMapping` (`DataMigrationMapper.php:90-135`).
-    * `incoming` must carry `source_*` and `dest_*` columns.
+  /** Insert-or-update a batch of mappings: rows in `incoming` replace
+    * existing rows with the same source-id tuple, everything else is
+    * preserved; `updated` is stamped and `status` set — set-wise parity
+    * with `addMapping` (`DataMigrationMapper.php:90-135`). `incoming`
+    * must carry `source_*` and `dest_*` columns.
+    *
+    * On a non-bucketed table with a published generation whose columns
+    * the stamped rows match, the rows land as one log segment: O(batch)
+    * bytes, replace-by-key applied by the readers. Otherwise — the first
+    * record, a bucketed table, a full log, or rows that widen the table
+    * — generation ⊎ log ⊎ rows merge into the next generation.
     */
   def record(spark: SparkSession, spec: MigrationSpec, incoming: DataFrame, status: String): Unit =
-    // serialize read-merge-write per mapping table: `extends` siblings
-    // share the parent's table and may run concurrently under
+    // serialize record per mapping table: `extends` siblings share the
+    // parent's table and may run concurrently under
     // executeAll(parallelism > 1)
     MappingStore.lockFor(tablePath(spec)).synchronized {
       val stamped = incoming
         .withColumn(UpdatedCol, current_timestamp())
         .withColumn(StatusCol, lit(status))
-      val merged = loadRaw(spark, spec) match {
-        case None => stamped
-        case Some(raw) =>
-          // id columns conform is widening in THIS merge: pre-widening
-          // keyed rows carry NULL there, and the replace-by-key match
-          // must treat that NULL as "recorded before the column existed"
-          // (matches any incoming value), or a re-arriving source key
-          // would be appended next to its own stale row forever.
-          val widenedSrc = spec.sourceIds.map(f => s"$SourcePrefix${f.name}")
-            .filterNot(raw.columns.contains).toSet
-          val existing = conform(spec, raw)
-          // Replace-by-key must distinguish the two row classes the table
-          // holds: keyed mappings (replaced when the same source tuple
-          // re-arrives) and orphan bookkeeping rows (ALL-null source ids —
-          // the recordOrphansKept invariant, `DataMigrationExecutor.php:
-          // 320-326`) which all share the "key" NULL — a null-safe
-          // anti-join on source ids alone would let ONE incoming orphan
-          // row wipe EVERY previously-kept orphan. Orphan rows are
-          // identified by their destination ids instead. "Keyed" means AT
-          // LEAST ONE non-null source id, NOT all non-null: a row recorded
-          // before a spec widening has NULL in the added column but is
-          // still a keyed mapping, not orphan bookkeeping. The anti-joins
-          // are plain equality (bucket-layout-served, no exchange) except
-          // in the one merge that widens, where the added column's stored
-          // NULL acts as a wildcard.
-          val srcKeyed: Column = spec.sourceIds
-            .map(f => col(s"$SourcePrefix${f.name}").isNotNull).reduce(_ || _)
-          val existKeyed = existing.filter(srcKeyed)
-          val existOrphan = existing.filter(!srcKeyed)
-          val newKeyed = stamped.filter(srcKeyed)
-          val newOrphan = stamped.filter(!srcKeyed)
-          val keepKeyed = existKeyed.join(newKeyed,
-            spec.sourceIds.map { f =>
-              val c = s"$SourcePrefix${f.name}"
-              val eq = existKeyed(c) === newKeyed(c)
-              if (widenedSrc.contains(c)) eq || existKeyed(c).isNull else eq
-            }.reduce(_ && _),
-            "left_anti")
-          val keepOrphan = existOrphan.join(newOrphan,
-            spec.destinationIds.map(f =>
-              existOrphan(s"$DestPrefix${f.name}") === newOrphan(s"$DestPrefix${f.name}"))
-              .reduce(_ && _),
-            "left_anti")
-          keepKeyed.unionByName(keepOrphan).unionByName(stamped)
+      def shape(s: org.apache.spark.sql.types.StructType) = s.map(f => f.name -> f.dataType).toMap
+      val appendTo = currentGen(spark, spec).filter(_ => buckets.isEmpty).filter { gen =>
+        val stored = ParquetDirs.schema(spark, s"${tablePath(spec)}/$gen")
+        checkIdTypes(spec, stored) // conform's refusal of a changed id type holds on appends too
+        shape(stored) == shape(stamped.schema) &&
+          SegmentLog.committed(spark, tablePath(spec), LogPrefix, gen).size < LogCompactAt
       }
-      writeGen(spark, spec, merged)
+      appendTo match {
+        case Some(gen) => SegmentLog.append(stamped, tablePath(spec), LogPrefix, gen)
+        case None =>
+          val merged = loadRaw(spark, spec) match {
+            case None => stamped
+            case Some(raw) =>
+              // id columns conform is widening in THIS merge: pre-widening
+              // keyed rows carry NULL there, and the replace-by-key match
+              // must treat that NULL as "recorded before the column existed"
+              // (matches any incoming value), or a re-arriving source key
+              // would be appended next to its own stale row forever.
+              val widenedSrc = spec.sourceIds.map(f => s"$SourcePrefix${f.name}")
+                .filterNot(raw.columns.contains).toSet
+              replaceByKey(conform(spec, raw), stamped,
+                spec.sourceIds.map(f => s"$SourcePrefix${f.name}"),
+                spec.destinationIds.map(f => s"$DestPrefix${f.name}"), widenedSrc)
+          }
+          writeGen(spark, spec, merged)
+      }
     }
 
   /** Orphan-keep bookkeeping: mapping rows whose source ids are all NULL
@@ -265,8 +319,8 @@ final class MappingStore(
   }
 
   private def writeGen(spark: SparkSession, spec: MigrationSpec, df: DataFrame): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(tablePath(spec), "_CURRENT")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val table = new org.apache.hadoop.fs.Path(tablePath(spec))
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prev = currentGen(spark, spec)
     val next = prev match {
       case None => "gen0"
@@ -274,7 +328,7 @@ final class MappingStore(
     }
     buckets match {
       case None =>
-        df.write.mode(SaveMode.Overwrite).parquet(s"${tablePath(spec)}/$next")
+        ParquetDirs.write(df, s"${tablePath(spec)}/$next", SaveMode.Overwrite)
       case Some(n) =>
         val keys = spec.sourceIds.map(f => s"$SourcePrefix${f.name}")
         // pre-partition on the bucket key so the write itself is spread
@@ -285,18 +339,18 @@ final class MappingStore(
           .option("path", s"${tablePath(spec)}/$next")
           .saveAsTable(catalogName(spec, next))
     }
-    val out = fs.create(cur, true)
-    try out.write(next.getBytes("UTF-8")) finally out.close()
+    GenerationPointer.publish(spark, tablePath(spec), next)
     // the superseded generation's catalog entry is metadata-only (external
     // table): drop it; its data files stay for lazy readers until vacuum
     if (buckets.isDefined)
       prev.foreach(g => spark.sql(s"DROP TABLE IF EXISTS ${catalogName(spec, g)}"))
     keepGenerations.foreach(k =>
-      GenerationVacuum.vacuum(fs, new org.apache.hadoop.fs.Path(tablePath(spec)), k))
+      GenerationVacuum.vacuum(fs, table, k))
   }
 }
 
-/** Shared generation-directory vacuum for generation-pointer stores.
+/** Shared generation-directory vacuum for generation-pointer stores: a
+  * vacuumed generation takes its segment logs with it.
   * `protected_` generations (named tags — the Iceberg tag semantic) are
   * never deleted regardless of age: a vacuum that could silently drop a
   * tagged baseline would make tags decorative.
@@ -306,13 +360,18 @@ private[graft] object GenerationVacuum {
       base: org.apache.hadoop.fs.Path, keep: Int,
       protected_ : Set[Long] = Set.empty): Unit = {
     require(keep >= 1, "must keep at least the current generation")
-    val gens = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen"))
-      .map(s => (s.getPath.getName.stripPrefix("gen").toLong, s.getPath))
+    val dirs = fs.listStatus(base).toSeq.filter(_.isDirectory).map(_.getPath)
+    val gens = dirs
+      .filter(_.getName.startsWith("gen"))
+      .map(p => (p.getName.stripPrefix("gen").toLong, p))
       .sortBy(_._1)
     gens.dropRight(keep)
       .filterNot { case (g, _) => protected_.contains(g) }
-      .foreach { case (_, p) => fs.delete(p, true) }
+      .foreach { case (g, p) =>
+        fs.delete(p, true)
+        // the segment logs bound to it (`mordelta_gen<g>_<k>`, `mlog_gen<g>_<k>`)
+        dirs.filter(d => SegmentLog.boundTo(d.getName, s"gen$g")).foreach(fs.delete(_, true))
+      }
   }
 }
 
@@ -332,4 +391,20 @@ object MappingStore {
   val StatusCol = "status"
   val StatusMigrated = "migrated" // DataMigrationMapper.php:28-30
   val StatusStub = "stub"
+
+  /** Directory prefix of a table's record log ([[SegmentLog]]). */
+  private val LogPrefix = "mlog"
+
+  /** A record that finds this many committed log segments folds the log
+    * into the next generation instead of appending to it. Measured on a
+    * 12-batch `stream_curation` stream (BENCH_NOTES): every read of
+    * generation ⊎ log pays the merge the append skipped, and a curation
+    * stage reads its mapping about twice per record, so with folds at 2
+    * or 8 segments the batches whose readers saw 2 or more segments ran
+    * slower than the full rewrite, and each fold stalled its batch for
+    * 26–76 s. At 1 a table holds at most one segment and a stage's
+    * records alternate append, fold: the fold batches run ~1.2× the full
+    * rewrite's, the append batches ~0.63×.
+    */
+  val LogCompactAt = 1
 }

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import graft.drivers.{DeltaDestination, DestinationDriver, ParquetDestinationDriver, SourceDriver}
+import graft.drivers.{DeltaDestination, DestinationDriver, ParquetDestinationDriver, ParquetDirs, SourceDriver}
 import graft.exec.{CurationPipeline, Migration, PruneOrphans}
 import graft.spec.MigrationSpec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Streaming LLM-corpus curation — the engine's two flagship halves run
   * as ONE system: documents arrive as a stream, and every micro-batch
@@ -74,10 +74,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * both compute and bytes written; dedup's history is scanned once per
   * batch but never shuffled (broadcast semi-join on the batch's
   * fingerprints); mix re-derives over the curated-survivor state — the
-  * one O(corpus) stage, inherent to its global-cap semantics. The
-  * mapping upsert is a read-merge-write of a narrow (source_id,
-  * dest_id) table — at true scale, compact the stage delta logs on a
-  * schedule ([[ParquetDestinationDriver.compactDeltas]]) to bound the
+  * one O(corpus) stage, inherent to its global-cap semantics. A
+  * stage's mapping records alternate: one appends an O(batch) segment
+  * to the narrow (source_id, dest_id) table's log, the next folds it
+  * into a new generation — at true scale, compact the stage delta logs on
+  * a schedule ([[ParquetDestinationDriver.compactDeltas]]) to bound the
   * reconcile tax.
   */
 object StreamingCuration {
@@ -139,7 +140,7 @@ object StreamingCuration {
       def read(s: SparkSession, sp: MigrationSpec): DataFrame = df
     }
     val metrics = scala.collection.mutable.ListBuffer.empty[(Long, String, Long, Long)]
-    val landed = spark.read.parquet(s"$base/landed/batch_$batchId").persist()
+    val landed = ParquetDirs.read(spark, s"$base/landed/batch_$batchId").persist()
     var langidState: Option[DataFrame] = None
     val lane = new WriteLane
     try {
@@ -250,7 +251,8 @@ object StreamingCuration {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          batch.write.mode("overwrite").parquet(s"$base/landed/batch_$batchId")
+          ParquetDirs.write(batch, s"$base/landed/batch_$batchId", SaveMode.Overwrite)
+          ParquetDirs.retain(s"$base/landed", s"batch_$batchId") // earlier batches are read no more
           if (incremental) runDagIncremental(spark, base, batchId, dests = dests)
           else runDag(spark, base, dests = dests)
         }

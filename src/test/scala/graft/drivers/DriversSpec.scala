@@ -138,10 +138,15 @@ class DriversSpec extends SparkSpec {
     val dir = scratchDir("pq_vac")
     val s = mkSpec("n/a", s"$dir/out")
     val d = new ParquetDestinationDriver(keepGenerations = Some(2))
-    (0 until 4).foreach(i => d.write(Seq((1L, s"v$i")).toDF("id", "v"), s))
-    val gens = new java.io.File(s"$dir/out").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("gen")).map(_.getName).sorted
-    assert(gens.toSeq == Seq("gen2", "gen3"), s"older generations vacuumed: ${gens.toSeq}")
+    (0 until 4).foreach { i =>
+      d.write(Seq((1L, s"v$i")).toDF("id", "v"), s)
+      d.appendDelta(Seq((1L, s"d$i")).toDF("id", "v"), s)
+    }
+    def dirs(prefix: String) = new java.io.File(s"$dir/out").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith(prefix)).map(_.getName).sorted.toSeq
+    assert(dirs("gen") == Seq("gen2", "gen3"), s"older generations vacuumed: ${dirs("gen")}")
+    assert(dirs("mordelta") == Seq("mordelta_gen2_0", "mordelta_gen3_0"),
+      s"a vacuumed generation's delta log goes with it: ${dirs("mordelta")}")
     assert(d.snapshot(spark, s).get.head().getString(1) == "v3")
   }
 
@@ -633,6 +638,118 @@ class DriversSpec extends SparkSpec {
     val after = d.morSnapshot(spark, sp).get
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(after == mor, "post-compaction morSnapshot must equal snapshot")
+  }
+
+  test("merge-on-read: a delta segment without its _SUCCESS marker is invisible and never reused") {
+    import spark.implicits._
+    val dir = scratchDir("mor_uncommitted") + "/dest"
+    val sp = mkSpec("", dir, dstIds = Seq(IdField("id", LongId)))
+    val d = new ParquetDestinationDriver
+    d.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), sp)
+    assert(d.appendDelta(Seq((2L, "B")).toDF("id", "v"), sp) == 0L)
+    // an append killed mid-write leaves only the committer's _temporary
+    new java.io.File(s"$dir/mordelta_gen0_1/_temporary/0").mkdirs()
+    def state = d.morSnapshot(spark, sp).get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(state == Map(1L -> "a", 2L -> "B"))
+    assert(d.deltaSegments(spark, sp) == Seq(0L))
+    assert(d.appendDelta(Seq((1L, "A")).toDF("id", "v"), sp) == 2L, "the next append takes an index past the debris")
+    assert(state == Map(1L -> "A", 2L -> "B"))
+    assert(d.deltaSegments(spark, sp) == Seq(0L, 2L))
+  }
+
+  test("exclusive create: of racing creators on the local filesystem exactly one wins, with its content") {
+    val dir = new org.apache.hadoop.fs.Path(scratchDir("excl_create"))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (0 until 40).foreach { round =>
+      val p = new org.apache.hadoop.fs.Path(dir, s"_claim_$round")
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val racers = (0 until 8).map(i => pool.submit(new java.util.concurrent.Callable[Boolean] {
+        def call(): Boolean = { start.await(); ExclusiveCreate(fs, p, s"racer$i".getBytes("UTF-8")) }
+      }))
+      start.countDown()
+      val won = racers.map(_.get).zipWithIndex.collect { case (true, i) => i }
+      assert(won.size == 1, s"round $round: winners $won")
+      val in = fs.open(p)
+      try assert(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") == s"racer${won.head}")
+      finally in.close()
+    } finally pool.shutdown()
+    assert(fs.listStatus(dir).forall(!_.getPath.getName.endsWith(".tmp")), "temporary files left behind")
+  }
+
+  test("generation pointer: a blank _CURRENT fails loudly instead of reading the table's base directory") {
+    import spark.implicits._
+    val dir = scratchDir("pq_blank_ptr") + "/dest"
+    val sp = mkSpec("", dir)
+    val d = new ParquetDestinationDriver
+    d.write(Seq((1L, "a")).toDF("id", "v"), sp)
+    // a publish cut between its truncate and its write
+    val ptr = new org.apache.hadoop.fs.Path(s"$dir/_CURRENT")
+    ptr.getFileSystem(spark.sparkContext.hadoopConfiguration).create(ptr, true).close()
+    val e = intercept[BlankGenerationPointerException](d.snapshot(spark, sp))
+    assert(e.getMessage.contains("_CURRENT"))
+    intercept[BlankGenerationPointerException](d.currentGeneration(spark, sp))
+  }
+
+  test("generation pointer: a reader racing repeated publishes never sees a blank or partial pointer") {
+    val base = scratchDir("ptr_race") + "/t"
+    GenerationPointer.publish(spark, base, "gen0")
+    @volatile var done = false
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reader = new Thread(() => while (!done) seen.add(
+      try GenerationPointer.read(spark, base).getOrElse("none")
+      catch { case e: Exception => e.toString }))
+    reader.start()
+    try (1 to 300).foreach(i => GenerationPointer.publish(spark, base, s"gen$i"))
+    finally { done = true; reader.join() }
+    val bad = seen.toArray.map(_.toString).filterNot(_.matches("gen\\d+"))
+    assert(bad.isEmpty, s"reads other than a full pointer: ${bad.distinct.take(3).toSeq}")
+    assert(GenerationPointer.read(spark, base).contains("gen300"))
+    assert(new java.io.File(base).list().toSeq == Seq("_CURRENT"), "temporary files left behind")
+  }
+
+  test("schema cache: a morSnapshot over more than 16 segments, read twice, runs no inference job") {
+    import spark.implicits._
+    val dir = scratchDir("mor_many_segments") + "/dest"
+    val sp = mkSpec("", dir, dstIds = Seq(IdField("id", LongId)))
+    val d = new ParquetDestinationDriver
+    d.write(Seq((1L, "a")).toDF("id", "v"), sp)
+    (0 until 20).foreach(i => d.appendDelta(Seq((i.toLong, s"d$i")).toDF("id", "v"), sp))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (1 to 2).foreach { _ =>
+        d.morSnapshot(spark, sp).get.schema // builds the plan: reads every segment, runs no action
+      }
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      assert(jobs.get == 0, s"${jobs.get} inference jobs for directories the engine wrote")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(d.morSnapshot(spark, sp).get.count() == 20)
+  }
+
+  test("schema cache: generations and delta segments record what Spark infers; a rewrite is re-read") {
+    import spark.implicits._
+    val dir = scratchDir("pq_schema_cache") + "/dest"
+    val sp = mkSpec("", dir, dstIds = Seq(IdField("id", LongId)))
+    val d = new ParquetDestinationDriver
+    // non-nullable primitives, nested and container types, a timestamp
+    val df = Seq((1L, 2.5, "a", Seq(1, 2), Map("k" -> 1L), (3, "x"), java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+      .toDF("id", "score", "v", "xs", "m", "s", "ts")
+    d.write(df, sp)
+    d.appendDelta(df.withColumn("v", lit("b")), sp)
+    d.appendTombstones(Seq(1L).toDF("id"), sp)
+    Seq("gen0", "mordelta_gen0_0", "mordelta_gen0_1").foreach { g =>
+      val recorded = ParquetDirs.recorded(spark, s"$dir/$g")
+      assert(recorded.contains(spark.read.parquet(s"$dir/$g").schema), s"$g: recorded $recorded")
+    }
+    // rewritten in place behind the engine's back: the old entry is stale
+    Thread.sleep(5)
+    Seq(("z", 1)).toDF("other", "cols").write.mode("overwrite").parquet(s"$dir/gen0")
+    assert(ParquetDirs.recorded(spark, s"$dir/gen0").isEmpty)
+    assert(d.currentSchema(spark, sp).get.fieldNames.toSeq == Seq("other", "cols"))
   }
 
   test("rollback: pointer flips back, branch writes to max(gen)+1, abandoned gen readable") {

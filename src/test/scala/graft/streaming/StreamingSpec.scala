@@ -332,6 +332,47 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  // Crash points inside a delta stage's mapping record. Batch 0 publishes
+  // each mapping's gen0; batch 1 records as log segment mlog_gen0_0.
+  // `afterCrash` turns the state the CrashingDest leaves (mapping
+  // segment committed, data not appended) into the one each kill leaves.
+  private def mappingCrashCase(point: String, stage: String)(
+      afterCrash: java.io.File => Unit): Unit =
+    test(s"streaming curation crash point: $stage, $point — restart equals a crash-free run") {
+      val base = scratchDir("stream_cur_mcp")
+      crashAndRestart(base, scratchDir("stream_cur_mcp_ckpt"), stage, afterWrite = false,
+        s"injected crash in $stage: $point", afterCrash = { dest =>
+          val table = new java.io.File(s"$base/map/$stage")
+          assert(new java.io.File(table, "mlog_gen0_0/_SUCCESS").exists(),
+            s"batch 1 did not record $stage as a log segment: ${table.list().toSeq.sorted}")
+          assert(dest.deltaSegments(spark, CurationPipeline.migrations(s"$base/stages")
+            .find(_.spec.name == stage).get.spec).isEmpty, s"$stage data was appended")
+          afterCrash(table)
+        })
+      val got = curationState(base)
+      got.zip(crashFreeState).foreach { case ((name, rows), (_, want)) =>
+        assert(rows == want, s"$name differs from the crash-free run: " +
+          s"${rows.diff(want).take(3)} extra, ${want.diff(rows).take(3)} missing")
+      }
+    }
+
+  mappingCrashCase("after its mapping segment, before its data append", "llm_dedup")(_ => ())
+
+  mappingCrashCase("mid mapping segment (a _temporary-only directory)", "llm_ingest") { table =>
+    val seg = new java.io.File(table, "mlog_gen0_0")
+    org.apache.commons.io.FileUtils.deleteDirectory(seg)
+    assert(new java.io.File(seg, "_temporary/0").mkdirs())
+  }
+
+  mappingCrashCase("mid mapping compaction (an unpublished next generation)", "llm_quality") { table =>
+    // a compaction killed while writing its generation: gen1 holds the
+    // committer's _temporary and a stray part file, `_CURRENT` still gen0
+    val gen1 = new java.io.File(table, "gen1")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(table, "gen0"), gen1)
+    new java.io.File(gen1, "_SUCCESS").delete()
+    assert(new java.io.File(gen1, "_temporary/0").mkdirs())
+  }
+
   test("streaming curation: a batch leaves no pinned RDD behind") {
     val base = scratchDir("stream_cur_pins")
     val before = spark.sparkContext.getPersistentRDDs.keySet

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Interleaved A/B of the repository benchmark between two source trees.
 
-    python3 tools/perfab.py <base-rev> <workload> [--pairs 10] [--seed0 N]
+    python3 tools/perfab.py <base-rev> <workload> [--pairs 10] [--seed0 N] [--layers SEED]
 
 Side A is <base-rev>, exported with `git archive` into $TMPDIR/perfab/<sha>
 (reused by later invocations, so its harness build is cached). Side B is the
@@ -15,6 +15,10 @@ median and quartiles, the B/A ratio of the medians, and the pairs B won.
 `claim` reads "yes" when B won at least 9 of 10 pairs (the same share of
 any other count) and the medians differ by more than A's quartile spread:
 the rule a claimed gain must pass. Failed runs are listed and left out.
+
+With --layers SEED, one `--trace 1` run per side on SEED follows the pairs
+(A first), and every per-layer metric of BENCHMARK.json is printed side by
+side with its B/A ratio. `--pairs 0 --layers SEED` runs only that.
 """
 import argparse
 import json
@@ -45,10 +49,10 @@ def export(rev, work):
     return dest
 
 
-def run_once(tree, workload, seed, seconds):
-    """The end-to-end metrics of one benchmark run, or the reason it failed."""
+def run_once(tree, workload, seed, seconds, trace=0):
+    """The metrics of one benchmark run, or the reason it failed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     try:
@@ -73,12 +77,13 @@ def main():
     ap.add_argument("workload")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, default=1)
+    ap.add_argument("--layers", type=int, metavar="SEED",
+                    help="after the pairs, one traced run per side on SEED")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     seconds = bench["run_seconds"]
-    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
     sides = {"A": export(args.base_rev, os.path.join(tempfile.gettempdir(), "perfab")),
              "B": ROOT}
     runs = {"A": [], "B": []}
@@ -96,6 +101,18 @@ def main():
         for side in "AB":
             runs[side].append(got[side])
 
+    if args.pairs:
+        table(args, bench, runs)
+    if args.layers is not None:
+        failures += layers(args, bench, sides)
+    for f in failures:
+        print(f"failed: {f}")
+    sys.exit(1 if failures else 0)
+
+
+def table(args, bench, runs):
+    """Per end-to-end metric: medians, quartiles, pair wins and the claim rule."""
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
     print(f"{args.workload}: A={args.base_rev} B=working tree, "
           f"{args.pairs} interleaved pairs, seeds {args.seed0}..{args.seed0 + args.pairs - 1}")
     print(f"{'metric':<14}{'A median':>12}{'A q1-q3':>23}{'B median':>12}{'B q1-q3':>23}"
@@ -115,9 +132,31 @@ def main():
         print(f"{name:<14}{ma:>12.3f}{f'{a1:.3f}-{a3:.3f}':>23}{mb:>12.3f}"
               f"{f'{b1:.3f}-{b3:.3f}':>23}{ratio:>7.3f}{f'{wins}/{len(pairs)}':>9}  "
               f"{'yes' if claim else 'no'}")
-    for f in failures:
-        print(f"failed: {f}")
-    sys.exit(1 if failures else 0)
+
+
+def layers(args, bench, sides):
+    """Print one traced run per side, metric by metric; return its failures."""
+    seed = args.layers
+    got, failures = {}, []
+    for side in "AB":
+        got[side], err = run_once(sides[side], args.workload, seed, bench["run_seconds"], trace=1)
+        if err:
+            failures.append(f"traced seed {seed} side {side}: {err}")
+        print(f"perfab: traced seed {seed} {side} "
+              + (json.dumps(got[side]) if got[side] else "FAILED"), file=sys.stderr, flush=True)
+    print(f"{args.workload} per-layer: A={args.base_rev} B=working tree, "
+          f"one traced run each, seed {seed}")
+    print(f"{'metric':<34}{'unit':>7}{'A':>12}{'B':>12}{'B/A':>8}")
+    a, b = got["A"] or {}, got["B"] or {}
+    for m in bench["per_layer"]:
+        name = m["name"]
+        if name not in a and name not in b:
+            continue
+        va, vb = a.get(name), b.get(name)
+        ratio = f"{vb / va:.3f}" if va and vb is not None else "-"
+        fmt = lambda v: "-" if v is None else f"{v:.3f}"
+        print(f"{name:<34}{m['unit']:>7}{fmt(va):>12}{fmt(vb):>12}{ratio:>8}")
+    return failures
 
 
 if __name__ == "__main__":
