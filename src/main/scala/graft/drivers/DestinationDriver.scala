@@ -1035,8 +1035,9 @@ object ParquetDestinationDriver {
   * swaps it in last, the same shape as the reference's temp file +
   * atomic copy: an update run's plan can keep reading the current
   * directory while its replacement is written, and readers never see a
-  * half-written output. Uniqueness of keys is asserted by the executor
-  * before write (the reference errors lazily on keyed read, `:135-139`).
+  * half-written output. Key uniqueness is not checked before the write:
+  * like the reference (`:135-139`), a duplicate key errors lazily on a
+  * keyed read ([[DestinationDriver.readByIds]]).
   */
 final class CsvDestinationDriver extends DestinationDriver {
   override def overwriteIsReadSafe: Boolean = true // stage + swap below

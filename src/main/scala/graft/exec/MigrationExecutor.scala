@@ -589,8 +589,11 @@ final class MigrationExecutor(
   }
 
   // Plain equality, deliberately: destination ids are key columns the
-  // reference's IdField contract types as int|string (never null), and
-  // the uniqueness guard rejects degenerate keys before any write. `===`
+  // reference's IdField contract types as int|string (never null). This
+  // path checks neither NULL nor duplicate keys before the write: a row
+  // whose key is NULL matches nothing here, and duplicate keys surface
+  // only on a keyed read-back (`readByIds`) or, for a merge-on-read
+  // delta, in `appendDelta`'s duplicate-key probe. `===`
   // keeps the join keys identical to a bucketed destination's layout
   // columns, so the snapshot side of the orphan anti-join carries its
   // partitioning from the files; `<=>` would compile to composite keys

@@ -187,61 +187,45 @@ object Retrieval {
     * deterministic); similarity is exact-integer term-set Jaccard.
     *
     * Scale shape: everything after candidate generation is bounded by
-    * the candidate lists, not the corpus — the pair-intersection join
-    * runs co-keyed on (probe, term) over ≤ k·|probes| candidate rows,
-    * and the greedy loop folds ONE collected row per probe (≤ k
-    * candidates + C(k,2) pair sims — bounded arrays, no driver
-    * traffic). `wRel`/`wDiv` are passed as literal doubles and must be
+    * the candidate lists, not the corpus — `docTerms` is scanned once
+    * against the broadcast candidates (≤ k·|probes| rows; nothing
+    * corpus-sized is shuffled), and ONE group per probe collects its
+    * ≤ k candidates with their distinct terms. Term sets, relevance,
+    * pair Jaccard and the greedy loop all run inside that group.
+    * `wRel`/`wDiv` are passed as literal doubles and must be
     * written identically in any replaying oracle: deriving one from
     * the other re-associates IEEE arithmetic (1 − 0.7 ≠ 0.3 in
     * binary).
     *
     * `cands`: (probe_id, doc_id, score). `docTerms`: DISTINCT
-    * (doc_id, term). Output: (probe_id, sel_rank, doc_id, mmr).
+    * (doc_id, term). A candidate with no terms stays selectable, and
+    * two candidates that share no term have similarity 0.0.
+    * Output: (probe_id, sel_rank, doc_id, mmr).
     */
   def mmrDiversify(
       cands: DataFrame, docTerms: DataFrame,
       wRel: Double = 0.7, wDiv: Double = 0.3, kOut: Int = 5): DataFrame = {
     val spark = cands.sparkSession
     import spark.implicits._
-    val ct = cands.select(col("probe_id"), col("doc_id"))
-      .join(docTerms.select(col("doc_id"), col("term")), Seq("doc_id"))
-    val sizes = ct.groupBy(col("probe_id"), col("doc_id"))
-      .agg(count(lit(1)).as("sz"))
-    val inter = ct.select(col("probe_id"), col("doc_id").as("xa"), col("term"))
-      .join(ct.select(col("probe_id"), col("doc_id").as("xb"), col("term")),
-        Seq("probe_id", "term"))
-      .filter(col("xa") < col("xb"))
-      .groupBy(col("probe_id"), col("xa"), col("xb"))
-      .agg(count(lit(1)).as("ia"))
-    val pairs = inter
-      .join(sizes.select(col("probe_id"), col("doc_id").as("xa"),
-        col("sz").as("sa")), Seq("probe_id", "xa"))
-      .join(sizes.select(col("probe_id"), col("doc_id").as("xb"),
-        col("sz").as("sb")), Seq("probe_id", "xb"))
-      .select(col("probe_id"), col("xa"), col("xb"),
-        (col("ia").cast("double") / (col("sa") + col("sb") - col("ia")))
-          .as("sim"))
-    val maxs = cands.groupBy(col("probe_id")).agg(max(col("score")).as("ms"))
-    val cl = cands.join(maxs, Seq("probe_id"))
-      .select(col("probe_id"), col("doc_id"),
-        (col("score") / col("ms")).as("rel"))
+    val c = cands.select(col("probe_id"), col("doc_id"), col("score"))
+    val termed = docTerms.select(col("doc_id"), col("term"))
+      .join(broadcast(c), Seq("doc_id"))
+    // every candidate once more with a NULL term: a term-less one is kept
+    termed.unionByName(c.withColumn("term", lit(null).cast("string")))
       .groupBy(col("probe_id"))
-      .agg(sort_array(collect_list(struct(col("doc_id").as("_1"),
-        col("rel").as("_2")))).as("cl"))
-    val pl = pairs.groupBy(col("probe_id"))
-      .agg(collect_list(struct(col("xa").as("_1"), col("xb").as("_2"),
-        col("sim").as("_3"))).as("pl"))
-    cl.join(pl, Seq("probe_id"), "left")
-      .select(col("probe_id"), col("cl"),
-        coalesce(col("pl"),
-          expr("CAST(array() AS array<struct<_1:bigint,_2:bigint,_3:double>>)"))
-          .as("pl"))
-      .as[(Long, Seq[(Long, Double)], Seq[(Long, Long, Double)])]
-      .flatMap { case (probe, candList, pairList) =>
-        val sims = pairList
-          .flatMap { case (a, b, s) => Seq((a, b) -> s, (b, a) -> s) }.toMap
-        var remaining = candList
+      .agg(collect_list(struct(col("doc_id"), col("score"), col("term"))).as("rows"))
+      .as[(Long, Seq[(Long, Double, String)])]
+      .flatMap { case (probe, rows) =>
+        val terms = rows.groupBy(_._1)
+          .map { case (d, rs) => d -> rs.flatMap(r => Option(r._3)).toSet }
+        val scores = rows.map(r => r._1 -> r._2).toMap
+        val ms = scores.values.max
+        def sim(a: Long, b: Long): Double = {
+          val (ta, tb) = (terms(a), terms(b))
+          val ia = ta.count(tb)
+          if (ia == 0) 0.0 else ia.toDouble / (ta.size + tb.size - ia)
+        }
+        var remaining = scores.toList.sortBy(_._1).map { case (d, score) => (d, score / ms) }
         var selected = List.empty[Long]
         val out = scala.collection.mutable.ArrayBuffer
           .empty[(Long, Int, Long, Double)]
@@ -250,8 +234,7 @@ object Retrieval {
           val best = remaining.map { case (doc, rel) =>
             val maxSim =
               if (selected.isEmpty) 0.0
-              else selected.iterator
-                .map(s => sims.getOrElse((doc, s), 0.0)).max
+              else selected.iterator.map(sim(doc, _)).max
             (doc, wRel * rel - wDiv * maxSim)
           }.minBy { case (doc, m) => (-m, doc) }
           out += ((probe, k, best._1, best._2))

@@ -46,15 +46,20 @@ object RetrievalLayouts {
       .filter(col("probe_id") % 100 === 7 && col("probe_id") < 2000)
 
   /** Distinct (probe_id, term) of the probe documents — tiny
-    * (|probes| ≈ 20 docs), broadcast into every derived frame, not
-    * worth persisting.
+    * (|probes| ≈ 20 docs) and read by `bm25_scores`, `probe_rels` and
+    * eval_mrr's term counts, so it is built and persisted once per
+    * corpus (first materialized by the `bm25_scores` warm). It is not a
+    * declared layout: the bench times it inside its first consumer.
     */
   private def probeDistinctTerms(spark: SparkSession, sf: String): DataFrame =
-    load(spark, sf, "documents")
-      .join(broadcast(probes(spark, sf)), col("doc_id") === col("probe_id"))
-      .select(col("probe_id"),
-        explode(array_distinct(
-          filter(split(lower(col("text")), "[^a-z]+"), t => t =!= ""))).as("term"))
+    Layouts.memo(spark, sf, "probe_terms") {
+      load(spark, sf, "documents")
+        .join(broadcast(probes(spark, sf)), col("doc_id") === col("probe_id"))
+        .select(col("probe_id"),
+          explode(array_distinct(
+            filter(split(lower(col("text")), "[^a-z]+"), t => t =!= ""))).as("term"))
+        .persist(MEMORY_AND_DISK)
+    }
 
   /** Per-probe BM25 top-20 over documents (probe_id, doc_id, score, r)
     * — the verified ranking every batch consumer reads (k = 10

@@ -1667,9 +1667,10 @@ object TextQueries {
     // the serving pass that stops a result page or RAG context from
     // being five near-copies. Relevance is the probe-normalized
     // 6-dp-rounded BM25 score; diversity is exact-integer term-set
-    // Jaccard between CANDIDATES (a ≤C(20,2)-pair co-keyed join per
-    // probe, never doc×doc); the greedy loop folds one bounded
-    // collected row per probe. The oracle unrolls the 5 greedy steps
+    // Jaccard between CANDIDATES (never doc×doc): one scan of the
+    // impact index against the broadcast top-20 feeds one group per
+    // probe, whose ≤ 20 term sets give the pair similarities inside the
+    // greedy loop. The oracle unrolls the 5 greedy steps
     // as materialized CTEs with correlated max-sim subqueries — every
     // selection argmax replayed exactly (identical literal weights
     // both engines: 1 − 0.7 ≠ 0.3 in IEEE, so 0.3 is spelled, not

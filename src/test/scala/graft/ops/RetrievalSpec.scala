@@ -83,4 +83,36 @@ class RetrievalSpec extends SparkSpec {
     assert(base === repart)
     assert(base.nonEmpty)
   }
+
+  test("MMR: exact greedy selections, term-less candidates kept, empty-set similarity 0, ties to the lower doc_id") {
+    // probe 1: rel = score / 8. d10 and d11 share all four terms
+    // (Jaccard 1); d13 is disjoint from both; d12 and d15 have no terms
+    // at all (absent from docTerms), so every pair with them is 0.0.
+    // probe 2 has 2 candidates, fewer than kOut; d20 ⊂ d21 gives 3/4.
+    // d99 has terms but is no candidate.
+    val cands = Seq(
+      (1L, 10L, 8.0), (1L, 11L, 6.0), (1L, 12L, 4.0), (1L, 13L, 4.0), (1L, 15L, 2.0),
+      (2L, 20L, 3.0), (2L, 21L, 1.5)).toDF("probe_id", "doc_id", "score")
+    val docTerms = (Seq("a", "b", "c", "d").flatMap(t => Seq((10L, t), (11L, t))) ++
+      Seq((13L, "e"), (13L, "f"), (99L, "a")) ++
+      Seq("x", "y", "z").map(t => (20L, t)) ++ Seq("x", "y", "z", "w").map(t => (21L, t)))
+      .toDF("doc_id", "term")
+    val out = Retrieval.mmrDiversify(cands, docTerms, wRel = 0.5, wDiv = 0.5, kOut = 5)
+      .orderBy("probe_id", "sel_rank")
+      .select("probe_id", "sel_rank", "doc_id", "mmr")
+      .as[(Long, Int, Long, Double)].collect().toSeq
+    assert(out === Seq(
+      // step 1: argmax of 0.5·rel
+      (1L, 1, 10L, 0.5),
+      // step 2: d12 (term-less) and d13 (disjoint) tie at 0.5·0.5 − 0 →
+      // the lower doc_id; d11 reads 0.5·0.75 − 0.5·1 = −0.125
+      (1L, 2, 12L, 0.25),
+      (1L, 3, 13L, 0.25),
+      // d15 vs the term-less d12 is 0.0, not NaN: 0.5·0.25 − 0
+      (1L, 4, 15L, 0.125),
+      (1L, 5, 11L, -0.125),
+      (2L, 1, 20L, 0.5),
+      // 0.5·0.5 − 0.5·(3 / (3 + 4 − 3))
+      (2L, 2, 21L, -0.125)))
+  }
 }

@@ -173,11 +173,12 @@ class PlanAudit extends SparkSpec {
     "text_phrase_search" -> 6,   // positional-trigram scan + broadcast phrase join
     "q_holt_winters" -> 5,       // (type, hour) count agg + per-type fold
     // collect fold + orderBy
-    "text_mmr_diversify" -> 130, // the text_probe_bm25 lineage (probe terms,
-    // df, tf, stats — ~18 exchanges) prints once per textual reference:
-    // ct/sizes/inter/maxs/cl re-reference the candidate subtree ~6×
-    // (measured 107); at RUNTIME AQE collapses the identical subtrees
-    // to ReusedExchange — the q_triangle_count story
+    "text_mmr_diversify" -> 130, // candidates and terms come from the
+    // shared bm25 layouts; MMR is one scan of the impact index against
+    // the broadcast top-20 plus ONE probe-keyed group (digest and live
+    // audit: 3 executing exchanges, was 19 live with the old
+    // pair-join chain). PLANS_r22, the newest artifact, still records
+    // that chain's 14, so the ceiling drops with the next artifact.
     "q_rolling_regression" -> 4, // (type,hour) count agg + ONE type-keyed
     // window exchange (five frame aggs share it) + orderBy
     "q_seq_pairs" -> 7,          // ONE (user,type) first-touch agg feeding a
@@ -371,10 +372,9 @@ class PlanAudit extends SparkSpec {
     "eval_mrr" -> 1,
     // the one-row (tot_n, tot_pos) base-rate attach
     "eval_lift_deciles" -> 1,
-    // bm25TopK's one-row (n_docs, avgdl) stats attach — printed once per
-    // textual reference of the candidate lineage (ct/sizes/inter/maxs/cl
-    // all re-print it; at runtime AQE collapses the identical subtrees
-    // to ReusedExchange — the q_triangle_count story)
+    // the impact index's one-row (n_docs, avgdl) stats attach, inside the
+    // persisted layout: the digest counts 0 executing nested-loop joins
+    // (PLANS_r22 too); the allowance drops with the next artifact
     "text_mmr_diversify" -> 8,
     // the broadcast of the 6-row lag frame against the tiny hourly
     // spine — a bounded-constant fan-out, not a quadratic join

@@ -1,14 +1,16 @@
 #!/usr/bin/env python3
 """Interleaved A/B of the repository benchmark between two source trees.
 
-    python3 tools/perfab.py <base-rev> <workload> [--pairs 10] [--seed0 N] [--layers SEED]
+    python3 tools/perfab.py <base-rev> <workload|all> [--pairs 10] [--seed0 N] [--layers SEED]
 
 Side A is <base-rev>, exported with `git archive` into $TMPDIR/perfab/<sha>
 (reused by later invocations, so its harness build is cached). Side B is the
 working tree this script lives in. Pair i runs `perfbench/run.py --workload
 <workload> --seed <seed0 + i> --seconds <run_seconds of BENCHMARK.json>
 --trace 0` once on each side, one run at a time; even pairs run A first, odd
-pairs B first. Each run's metrics go to stderr as it ends.
+pairs B first. Each run's metrics go to stderr as it ends. With `all` in
+place of a workload, every workload of BENCHMARK.json runs its pairs in turn
+(same seeds) and gets its own table.
 
 For every end-to-end metric of BENCHMARK.json the table gives each side's
 median and quartiles, the B/A ratio of the medians, and the pairs B won.
@@ -74,7 +76,7 @@ def quartiles(xs):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("base_rev")
-    ap.add_argument("workload")
+    ap.add_argument("workload", help="a workload of BENCHMARK.json, or `all`")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, default=1)
     ap.add_argument("--layers", type=int, metavar="SEED",
@@ -83,37 +85,47 @@ def main():
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = bench["run_seconds"]
+    names = [w["name"] for w in bench["workloads"]]
+    if args.workload != "all" and args.workload not in names:
+        sys.exit(f"perfab: unknown workload {args.workload}; BENCHMARK.json has {', '.join(names)}")
     sides = {"A": export(args.base_rev, os.path.join(tempfile.gettempdir(), "perfab")),
              "B": ROOT}
+    failures = []
+    for workload in (names if args.workload == "all" else [args.workload]):
+        failures += ab(args, bench, sides, workload)
+    for f in failures:
+        print(f"failed: {f}")
+    sys.exit(1 if failures else 0)
+
+
+def ab(args, bench, sides, workload):
+    """The interleaved pairs and traced runs of one workload; returns its failures."""
     runs = {"A": [], "B": []}
     failures = []
     for i in range(args.pairs):
         seed = args.seed0 + i
         got = {}
         for side in ("AB" if i % 2 == 0 else "BA"):
-            metrics, err = run_once(sides[side], args.workload, seed, seconds)
+            metrics, err = run_once(sides[side], workload, seed, bench["run_seconds"])
             if err:
-                failures.append(f"pair {i} seed {seed} side {side}: {err}")
+                failures.append(f"{workload} pair {i} seed {seed} side {side}: {err}")
             got[side] = metrics
-            print(f"perfab: pair {i} seed {seed} {side} "
+            print(f"perfab: {workload} pair {i} seed {seed} {side} "
                   + (json.dumps(metrics) if metrics else "FAILED"), file=sys.stderr, flush=True)
         for side in "AB":
             runs[side].append(got[side])
 
     if args.pairs:
-        table(args, bench, runs)
+        table(args, bench, workload, runs)
     if args.layers is not None:
-        failures += layers(args, bench, sides)
-    for f in failures:
-        print(f"failed: {f}")
-    sys.exit(1 if failures else 0)
+        failures += layers(args, bench, sides, workload)
+    return failures
 
 
-def table(args, bench, runs):
+def table(args, bench, workload, runs):
     """Per end-to-end metric: medians, quartiles, pair wins and the claim rule."""
     better = {m["name"]: m["better"] for m in bench["end_to_end"]}
-    print(f"{args.workload}: A={args.base_rev} B=working tree, "
+    print(f"{workload}: A={args.base_rev} B=working tree, "
           f"{args.pairs} interleaved pairs, seeds {args.seed0}..{args.seed0 + args.pairs - 1}")
     print(f"{'metric':<14}{'A median':>12}{'A q1-q3':>23}{'B median':>12}{'B q1-q3':>23}"
           f"{'B/A':>7}{'B wins':>9}  claim")
@@ -131,20 +143,20 @@ def table(args, bench, runs):
         ratio = mb / ma if ma else float("nan")
         print(f"{name:<14}{ma:>12.3f}{f'{a1:.3f}-{a3:.3f}':>23}{mb:>12.3f}"
               f"{f'{b1:.3f}-{b3:.3f}':>23}{ratio:>7.3f}{f'{wins}/{len(pairs)}':>9}  "
-              f"{'yes' if claim else 'no'}")
+              f"{'yes' if claim else 'no'}", flush=True)
 
 
-def layers(args, bench, sides):
+def layers(args, bench, sides, workload):
     """Print one traced run per side, metric by metric; return its failures."""
     seed = args.layers
     got, failures = {}, []
     for side in "AB":
-        got[side], err = run_once(sides[side], args.workload, seed, bench["run_seconds"], trace=1)
+        got[side], err = run_once(sides[side], workload, seed, bench["run_seconds"], trace=1)
         if err:
-            failures.append(f"traced seed {seed} side {side}: {err}")
-        print(f"perfab: traced seed {seed} {side} "
+            failures.append(f"{workload} traced seed {seed} side {side}: {err}")
+        print(f"perfab: {workload} traced seed {seed} {side} "
               + (json.dumps(got[side]) if got[side] else "FAILED"), file=sys.stderr, flush=True)
-    print(f"{args.workload} per-layer: A={args.base_rev} B=working tree, "
+    print(f"{workload} per-layer: A={args.base_rev} B=working tree, "
           f"one traced run each, seed {seed}")
     print(f"{'metric':<34}{'unit':>7}{'A':>12}{'B':>12}{'B/A':>8}")
     a, b = got["A"] or {}, got["B"] or {}
